@@ -16,10 +16,8 @@ cross-round comparison):
   ("spread_pct" — a FRACTION, 0.25 = 25%, key name kept for
   cross-round continuity; plus the worst offender) so a reader can
   tell noise from regression before comparing rounds;
-* (round-5) queries whose spread exceeded 1% in the PREVIOUS round's
-  recorded bench (latest BENCH_r*.json) get 5 timed runs instead of 3,
-  so a one-off GC/compaction hit can't become the recorded best-of and
-  the flaky tail self-heals round over round.
+* every query gets the same $SPARK_GRAFT_BENCH_RUNS timed runs, and
+  its median ("queries_median") is reported next to the best-of.
 
 Each query is fully materialized via write.format("noop") — forces
 every operator, no driver-side collect cost in the timing.
@@ -31,13 +29,15 @@ import glob
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
 
 def _last_round_record() -> dict:
-    """Parsed bench JSON of the latest recorded BENCH_r*.json (the
-    previous round's driver run). Missing/corrupt file → {}."""
+    """The bench record the driver parsed from the latest recorded
+    BENCH_r*.json (the previous round's run): its ``parsed`` dict.
+    Missing/corrupt file or nothing parsed → {}."""
     here = os.path.dirname(os.path.abspath(__file__))
 
     def _round_no(path: str) -> int:
@@ -51,80 +51,15 @@ def _last_round_record() -> dict:
         return {}
     try:
         with open(benches[-1]) as f:
-            rec = json.load(f)
-        blob = rec.get("tail", "")
-        # the driver wraps bench stdout; the JSON line is the last {...}
-        line = blob[blob.rfind('{"metric"'):] if '{"metric"' in blob else ""
-        if line:
-            data = json.loads(line)
-        elif blob:
-            # the driver records only the LAST N bytes of stdout, so a
-            # long JSON line arrives FRONT-truncated (r9's record cut
-            # mid-"queries" and every cross-round delta silently
-            # vanished). Salvage what survives: the per-query pairs
-            # after the innermost '{' before "spread_pct" (a possibly
-            # partial queries dict — fewer deltas, never wrong ones),
-            # plus any complete trailing dict sections.
-            data = _salvage_truncated(blob)
-            if data:
-                print(
-                    f"bench: {os.path.basename(benches[-1])} JSON was "
-                    f"front-truncated; salvaged {len(data.get('queries', {}))} "
-                    "query timings for the cross-round comparison",
-                    file=sys.stderr,
-                )
-        else:
-            data = rec
-        return data if isinstance(data, dict) else {}
-    except (ValueError, OSError) as e:
+            parsed = json.load(f).get("parsed")
+    except (ValueError, OSError, AttributeError) as e:
         print(
             f"bench: could not parse {os.path.basename(benches[-1])} ({e}); "
             "previous-round comparisons disabled this run",
             file=sys.stderr,
         )
         return {}
-
-
-def _salvage_truncated(blob: str) -> dict:
-    """Best-effort parse of a FRONT-truncated bench JSON line (see
-    caller). Returns {} when nothing recognizable survives."""
-    import re
-
-    out: dict = {}
-    for key in ("spread_pct", "host_calibration"):
-        m = re.search(rf'"{key}": (\{{[^{{}}]*\}})', blob)
-        if m:
-            try:
-                out[key] = json.loads(m.group(1))
-            except ValueError:
-                pass
-    m = re.search(r'"queries": (\{[^{}]*\})', blob)
-    if m:
-        try:
-            out["queries"] = json.loads(m.group(1))
-            return out
-        except ValueError:
-            pass
-    head = blob.split('"spread_pct"')[0]
-    frag = head[head.rfind("{") + 1:]
-    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9][0-9.eE+-]*)', frag)
-    if pairs:
-        out["queries"] = {k: float(v) for k, v in pairs}
-    return out
-
-
-def _flaky_from_last_round(prev: dict) -> set[str]:
-    """Names whose spread exceeded 1% in the previous round's record."""
-    spreads = prev.get("spread_pct", {})
-    if not isinstance(spreads, dict) or not spreads:
-        if prev:
-            print(
-                "bench: no spread_pct in previous record; "
-                "flaky set empty (5-run rule degrades to 3 runs)",
-                file=sys.stderr,
-            )
-        return set()
-    return {n for n, s in spreads.items() if isinstance(s, (int, float)) and s > 0.01}
+    return parsed if isinstance(parsed, dict) else {}
 
 
 def _host_calibration(spark) -> dict:
@@ -203,18 +138,19 @@ def main() -> None:
         pc = prev_cal.get("cpu_loop_sec")
         if isinstance(pc, (int, float)) and pc > 0:
             host_speed_vs_prev = round(calibration["cpu_loop_sec"] / pc, 3)
-    flaky = _flaky_from_last_round(prev)
     timings: dict[str, float] = {}
+    medians: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for name in names:
         materialize(name)  # untimed warm run: one-time codegen/JIT
         samples = []
-        for _ in range(max(runs, 5) if name in flaky else runs):
+        for _ in range(runs):
             t0 = time.perf_counter()
             materialize(name)
             samples.append(time.perf_counter() - t0)
         best = min(samples)
         timings[name] = round(best, 3)
+        medians[name] = round(statistics.median(samples), 3)
         spreads[name] = round((max(samples) - best) / best, 3)
 
     total = round(sum(timings.values()), 3)
@@ -274,6 +210,7 @@ def main() -> None:
         "value_core_r1": core,
         "value_core_r1_ratio": round(core / _R1_CORE_RECORDED, 3),
         "queries": timings,
+        "queries_median": medians,
         "spread_pct": spreads,
         "worst_spread": worst,
         "delta_vs_prev_spread_units": delta_units,
@@ -281,7 +218,6 @@ def main() -> None:
         "host_calibration": calibration,
         "host_speed_vs_prev": host_speed_vs_prev,
         "runs_per_query": runs,
-        "flaky_reruns": sorted(n for n in flaky if n in timings),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     print(json.dumps(record))
@@ -291,8 +227,8 @@ def main() -> None:
     # (a) a COMPACT second line carrying the same contract keys minus the
     #     per-query observability extras — short enough to survive the
     #     tail window intact, and being the LAST '{"metric"' occurrence
-    #     it is what tail parsers (this file's _last_round_record
-    #     included) pick up;
+    #     it is what tail parsers pick up (the driver's ``parsed`` dict,
+    #     which _last_round_record reads, comes from it);
     # (b) the full record dumped to BENCH_LAST.json beside this script
     #     (timings only — never query results; every run overwrites it).
     compact = {

@@ -1032,9 +1032,11 @@ def embedding_neardup_exact(
     ``list_reduce``) — float64 add is deterministic given order, so
     every cosine, the threshold decision, and the rounded output are
     unchanged. Norms accumulate the same way. Mixed-dimension pairs
-    produce no output (the zip_with semantics), NaN/NULL elements
-    poison their pairs out exactly as before, and NULL ids/vectors
-    never pair.
+    produce no output (the zip_with semantics). A NaN element makes its
+    pairs' cosine NaN, and those pairs are KEPT: Spark and DuckDB both
+    order NaN above every double, so ``NaN >= threshold`` holds there.
+    A NULL element makes its pairs' cosine NULL, so its vector never
+    pairs, and neither do NULL ids/vectors.
 
     ``blocks`` defaults to the session's default parallelism; the pair
     SET is independent of it. Each block is replicated ``blocks`` times
@@ -1043,9 +1045,15 @@ def embedding_neardup_exact(
     function altogether."""
     spark = df.sparkSession
     id_t = df.schema[id_col].dataType.simpleString()
+    # a NULL element makes every cosine of its vector NULL (no pair), but
+    # Arrow hands it to NumPy as NaN, which must pair: drop it here
     base = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).filter(F.col("v").isNotNull() & F.col("id").isNotNull())
+    ).filter(
+        F.col("v").isNotNull()
+        & F.col("id").isNotNull()
+        & ~F.exists("v", lambda x: x.isNull())
+    )
     if blocks is None:
         blocks = spark.sparkContext.defaultParallelism
     n_blocks = max(int(blocks), 1)
@@ -1108,7 +1116,9 @@ def embedding_neardup_exact(
                 denom = np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = acc / denom
-                mask = (denom != 0.0) & (cos >= thr)
+                # NaN orders above every double in Spark and DuckDB, so a
+                # NaN cosine passes the threshold there: keep it here too
+                mask = (denom != 0.0) & (np.isnan(cos) | (cos >= thr))
                 # zip_with semantics: a mixed-dimension pair never scores
                 mask &= la[:, None] == lb[None, :]
                 if bool(same):

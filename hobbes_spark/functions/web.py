@@ -234,8 +234,11 @@ def registrable_domain(col: Column | str) -> Column:
 #: SINGLE slot keyed by applicationId (r13 advice: an id(spark)-keyed
 #: dict grew without bound, leaked entries for stopped sessions, and
 #: CPython id() reuse could in principle alias a dead session) — a new
-#: session simply rebuilds on miss.
-_RD_REL_CACHE: list = [None, None]  # [applicationId, relation]
+#: session simply rebuilds on miss. The slot holds ONE
+#: ``(applicationId, relation)`` tuple, written and read as a unit, so a
+#: concurrent reader can never pair one session's id with another
+#: session's relation.
+_RD_REL_CACHE: list = [None]
 
 
 def _psl_suffix_rel(spark):
@@ -246,8 +249,9 @@ def _psl_suffix_rel(spark):
     serves every probe level; all three probes then broadcast the SAME
     LocalRelation and exchange reuse builds it once)."""
     key = spark.sparkContext.applicationId
-    if _RD_REL_CACHE[0] == key and _RD_REL_CACHE[1] is not None:
-        return _RD_REL_CACHE[1]
+    cached = _RD_REL_CACHE[0]
+    if cached is not None and cached[0] == key:
+        return cached[1]
 
     merged: dict[str, list] = {}
 
@@ -272,7 +276,7 @@ def _psl_suffix_rel(spark):
     rel = spark.sql(
         f"SELECT * FROM VALUES {vals} AS t(__rd_sfx, __rd_e, __rd_w, __rd_x)"
     )
-    _RD_REL_CACHE[0], _RD_REL_CACHE[1] = key, rel
+    _RD_REL_CACHE[0] = (key, rel)
     return rel
 
 

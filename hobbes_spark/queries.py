@@ -13847,109 +13847,3 @@ def chart_gauge_lineitem(spark, sf_dir):
     return gauge_series(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     )
-
-
-# --------------------------------------------------------------------- #
-# Driver-gate window ordering.
-#
-# The driver's correctness gate records the FIRST 50 entries of
-# ``queries()`` in catalog order (each CORRECTNESS_r0N.json holds
-# exactly 50 rows).  Round 5 completed driver-signed coverage of the
-# whole catalog (r1-r5 signed union = 160/160), so from round 6 the
-# window is a STALENESS rotation: the 50 queries whose most recent
-# signed row is oldest, led by any entries new this round (never
-# signed).  From round 7 the rotation is additionally CHANGE-AWARE:
-# queries whose implementing functions were edited after their last
-# signature outrank pure age (tools/window_cohort.py computes the
-# cohort from the CORRECTNESS ledgers + git diffs, frozen at the
-# latest record's commit).  tests/test_oracle_parity.py::
-# test_driver_window_contract pins the window to that cohort.
-# Already-signed queries outside the window keep their local
-# gate_check + pytest cover as regression evidence.
-# --------------------------------------------------------------------- #
-
-# The correctness record this window's cohort was computed against
-# (r8 verdict item 1): tests/test_oracle_parity.py::
-# test_driver_window_contract calls tools/window_cohort.py with
-# as_of=this round, so the expectation is byte-stable even AFTER the
-# next round's CORRECTNESS file lands — the once-per-round boundary red
-# of r6-r8 is designed out.  Rotation-due enforcement (a newer record
-# exists, rotate me) lives in tools/gate_check.py, which refuses to run
-# until this stamp matches the newest record on disk.
-WINDOW_FROZEN_AT = "CORRECTNESS_r13"
-
-# Names whose results-producing code changed WITHOUT a driver signature
-# covering the change — escalations the cohort tool's git-diff detector
-# cannot see (r13 verdict item 1 lists the first 22): the r13 trailing-
-# sort sweep edited only queries.py (excluded from change detection by
-# design), the _keep_scored_pairs rework routed through module-private
-# helpers the one-level reference walk does not reach, and round-14's
-# own rewrites land after the frozen diff boundary.  window_cohort
-# ranks these as changed, so they lead the r14 signing window.
-WINDOW_FORCE_CHANGED: frozenset = frozenset({
-    # r13 changed-but-unsigned (verdict item 1, all 22)
-    "jaccard_prefix_pairs", "simhash_fingerprints",
-    "embedding_neardup_exact", "embedding_neardup_lsh",
-    "semantic_dedup_keep", "minhash_pairs", "minhash_incremental",
-    "ngram_jaccard_pairs", "prepare_corpus", "bm25_topk",
-    "curate_corpus", "decontaminate_docs",
-    "fim_docs", "span_corrupt_docs", "access_log_parse",
-    "canonical_url_docs", "code_likeness_docs", "html_text_stats",
-    "leakage_split_docs", "license_scan", "markdown_text_stats",
-    "audio_wav_features",
-    # r14's own rewrites (post-boundary, invisible to the frozen diff
-    # detector): the cosine-family norm hoist (similarity.py) and the
-    # scale-adaptive stream state partitioning (every stateful replay)
-    "cosine_topk", "hard_negatives_topk", "ann_lsh_topk",
-    "ann_lsh_fixture_exact", "ann_ivf_topk",
-    "stream_tumbling_counts", "stream_sliding_counts",
-    "stream_session_counts", "stream_interval_join",
-    "stream_static_enrich", "stream_ohlc_bars", "stream_curation_stats",
-    "stream_dedup_counts", "stream_restart_dedup",
-})
-
-_DRIVER_WINDOW_PRIORITY: list[str] = [
-    # Round-14 rotation, CHANGE-AWARE (tools/window_cohort.py --as-of
-    # 13): rank = (forced DESC, never-signed-or-changed DESC,
-    # last-signed round ASC, name ASC), frozen at the commit that
-    # recorded CORRECTNESS_r13.json.  WINDOW_FORCE_CHANGED leads — the
-    # r13 changed-but-unsigned 22 (verdict item 1) PLUS round-14's own
-    # rewrites (cosine-family norm hoist, scale-adaptive stream state,
-    # the one-pass prepare_corpus, the Arrow near-dup kernel), which
-    # the frozen diff detector cannot see because they land after the
-    # boundary commit; manual escalations outrank the detector-flagged
-    # r13 Arrow-boundary decoder rows so a window overflow never
-    # displaces a query whose results-producing code actually changed
-    # this round. The decoder rows fill the remaining slots.
-    "prepare_corpus", "stream_ohlc_bars", "stream_sliding_counts",
-    "ann_lsh_topk", "audio_wav_features", "bm25_topk", "curate_corpus",
-    "decontaminate_docs", "ann_ivf_topk", "canonical_url_docs", "fim_docs",
-    "hard_negatives_topk", "html_text_stats", "leakage_split_docs",
-    "semantic_dedup_keep", "span_corrupt_docs", "stream_restart_dedup",
-    "access_log_parse", "code_likeness_docs", "license_scan", "markdown_text_stats",
-    "minhash_pairs", "ngram_jaccard_pairs", "simhash_fingerprints",
-    "stream_curation_stats", "stream_tumbling_counts", "embedding_neardup_exact",
-    "embedding_neardup_lsh", "jaccard_prefix_pairs", "minhash_incremental",
-    "stream_dedup_counts", "stream_interval_join", "stream_session_counts",
-    "stream_static_enrich", "ann_lsh_fixture_exact", "cosine_topk",
-    "audio_meta", "compressed_text_ingest", "video_frame_plan_real",
-    "video_meta", "subtitle_cues", "archive_extract_stats", "extract_any_stats",
-    "frontier_schedule", "media_decode_meta", "office_text_stats",
-    "pdf_text_stats", "redirect_edge_graph", "stream_extract_ingest",
-    "video_frame_pts",
-]
-
-
-
-
-def _reorder_for_driver_window() -> None:
-    missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in QUERIES]
-    if missing:  # typo guard — fail at import, not silently at gate time
-        raise KeyError(f"_DRIVER_WINDOW_PRIORITY names not in catalog: {missing}")
-    rest = [n for n in QUERIES if n not in set(_DRIVER_WINDOW_PRIORITY)]
-    ordered = {n: QUERIES[n] for n in (*_DRIVER_WINDOW_PRIORITY, *rest)}
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_for_driver_window()

@@ -3802,6 +3802,22 @@ class TestRegistrableDomain:
         assert "LocalRelation" in opt
         assert opt.count("applySchemaToPythonRDD") <= 1  # only the input df
 
+    def test_suffix_relation_cache_rebuilds_for_other_session(
+            self, spark, monkeypatch):
+        """The cache slot holds one (applicationId, relation) tuple: a
+        slot left by another session is rebuilt, never returned, and
+        the rebuilt entry is then served as a hit."""
+        from hobbes_spark.functions import web
+
+        stale = object()
+        monkeypatch.setattr(web, "_RD_REL_CACHE", [("other-app", stale)])
+        rel = web._psl_suffix_rel(spark)
+        assert rel is not stale
+        assert set(rel.columns) == {"__rd_sfx", "__rd_e", "__rd_w", "__rd_x"}
+        key, cached = web._RD_REL_CACHE[0]
+        assert key == spark.sparkContext.applicationId and cached is rel
+        assert web._psl_suffix_rel(spark) is rel
+
     def test_generator_parses_upstream_syntax(self):
         """tools/gen_psl.py must digest the REAL upstream file's syntax
         unchanged: unicode rules punycode to A-labels, exceptions and

@@ -1,55 +1,29 @@
 """Local mirror of the driver's correctness gate: run every catalog query
 on Spark AND its DuckDB oracle over the same parquet, compare row count,
-column set, and an order-insensitive value snapshot.
+column set, and an order-insensitive value snapshot. The snapshot is
+the strict one of tools/gate_check.py (no int/float collapsing), so this
+suite and the gate apply one compare.
 
 The driver does this at sf=0.01; tests run sf0.001 (override with
 SPARK_GRAFT_TEST_SF_DIR) so the loop stays fast while iterating.
 """
 
-import math
+import os
+import sys
 
-import duckdb
 import pytest
 
 from hobbes_spark.queries import QUERIES
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
+from tools.gate_check import _snapshot, oracle_connection  # noqa: E402
 
 
 @pytest.fixture(scope="module")
 def ddb(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
     yield con
     con.close()
-
-
-def _norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NULL"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))  # 3.0 == 3 across engines
-        return f"{v:.9g}"
-    if isinstance(v, bool):
-        return str(bool(v))
-    return str(v)
-
-
-def _snapshot(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row) for row in pdf[cols].itertuples(index=False)
-    )
-    return cols, rows
 
 
 @pytest.mark.parametrize("name", [n for n, s in QUERIES.items() if s.oracle])
@@ -81,59 +55,20 @@ def test_no_rows_only_queries_remain():
     )
 
 
-def test_driver_window_contract():
-    """The driver records the FIRST 50 catalog entries: the reordered
-    window must hold exactly 50 distinct oracled names (a rows-only row
-    in the window wastes a signing slot).  Round-7 criterion: the
-    window is the CHANGE-AWARE staleness cohort of
-    ``tools/window_cohort.py`` — queries whose implementing functions
-    were edited after their last driver signature outrank pure age
-    (their signatures no longer cover the code that runs), then the
-    longest-unsigned by (last-signed round, name); never-signed entries
-    count as round 0 and automatically lead.  Round-9 criterion (r8
-    verdict item 1): the cohort is computed AS OF the record named by
-    ``queries.WINDOW_FROZEN_AT`` — not the newest file on disk — so
-    this test stays green when the next round's CORRECTNESS record
-    lands.  Rotation-due enforcement (newest record != stamp) lives in
-    tools/gate_check.py, which is loud without making `pytest tests/`
-    red at every round boundary."""
-    import os
-    import re
-    import sys
+def test_strict_snapshot_contract():
+    """The one oracle compare is strict: no int/float collapsing (a
+    DuckDB HUGEINT surfacing as float64 must not match a Spark BIGINT),
+    None and NaN both read NULL, and row order never matters."""
+    import pandas as pd
 
-    from hobbes_spark.queries import WINDOW_FROZEN_AT
-
-    names = list(QUERIES)
-    window = names[:50]
-    assert len(set(window)) == 50
-    assert all(QUERIES[n].oracle for n in window)
-
-    frozen_round = int(re.fullmatch(r"CORRECTNESS_r(\d+)", WINDOW_FROZEN_AT).group(1))
-
-    root = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-    sys.path.insert(0, root)
-    try:
-        from tools.window_cohort import (
-            compute_cohort,
-            last_signed_rounds,
-            record_commits,
-        )
-    finally:
-        sys.path.remove(root)
-    if not last_signed_rounds(frozen_round):
-        return  # fresh checkout without driver records: nothing to pin
-    if not record_commits():
-        # tarball checkout without git history: change-awareness can't
-        # compute and compute_cohort degrades to pure staleness, which
-        # the change-aware static window legitimately differs from
-        return
-    expected = set(compute_cohort(50, as_of=frozen_round))
-    assert set(window) == expected, (
-        f"window must be the change-aware staleness cohort as of "
-        f"{WINDOW_FROZEN_AT}: "
-        f"missing={sorted(expected - set(window))}, "
-        f"extra={sorted(set(window) - expected)}"
+    assert _snapshot(pd.DataFrame({"x": [42.0]})) != _snapshot(
+        pd.DataFrame({"x": [42]})
     )
+    nulls = pd.DataFrame({"x": [None, float("nan")]}, dtype=object)
+    assert _snapshot(nulls) == (["x"], [("NULL",), ("NULL",)])
+    fwd = pd.DataFrame({"b": [1, 2], "a": ["p", "q"]})
+    rev = pd.DataFrame({"a": ["q", "p"], "b": [2, 1]})
+    assert _snapshot(fwd) == _snapshot(rev) == (["a", "b"], [("p", "1"), ("q", "2")])
 
 
 # --------------------------------------------------------------------- #
@@ -147,15 +82,10 @@ def test_driver_window_contract():
 
 def _mini_gate(spark, tmp_path, name, tables):
     """Run QUERIES[name] and its DuckDB oracle over planted tables."""
-    import duckdb as _duckdb
-
     sf = str(tmp_path / "sf")
-    con = _duckdb.connect()
     for t, df in tables.items():
         df.write.mode("overwrite").parquet(f"{sf}/{t}.parquet")
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet/*.parquet')"
-        )
+    con = oracle_connection(sf, tables, glob="/*.parquet")
     spec = QUERIES[name]
     got = spec.spark(spark, sf).toPandas()
     exp = con.execute(spec.oracle).df()
@@ -297,3 +227,25 @@ def test_c4_quality_edges_parity(spark, tmp_path):
     )
     got, exp = _mini_gate(spark, tmp_path, "c4_quality", {"documents": docs})
     assert got == exp
+
+
+def test_embedding_neardup_exact_nan_parity(spark, tmp_path):
+    """A NaN element makes every cosine of its vector NaN, and Spark and
+    DuckDB both order NaN above every double, so ``cos >= threshold``
+    keeps those pairs in both engines; the NumPy kernel must keep them
+    too.  A NULL element (NULL cosine) still pairs with nothing."""
+    ones = [1.0] * 64
+    nan = [float("nan")] + [1.0] * 63
+    null_elem = [None] + [1.0] * 63
+    alt = [1.0, -1.0] * 32  # cosine 0 against ``ones``
+    emb = spark.createDataFrame(
+        [(1, ones, 0), (2, ones, 0), (3, nan, 0), (4, alt, 1),
+         (5, null_elem, 1), (6, None, 1)],
+        "vec_id bigint, embedding array<float>, label int",
+    )
+    got, exp = _mini_gate(
+        spark, tmp_path, "embedding_neardup_exact", {"embeddings": emb}
+    )
+    assert got == exp
+    pairs = sorted((int(a), int(b)) for _, a, b in got[1])  # cos, id_a, id_b
+    assert pairs == [(1, 2), (1, 3), (2, 3), (3, 4)]

@@ -27,6 +27,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.gate_check import _snapshot  # noqa: E402
+
 DEFAULT = [
     "prepare_corpus",
     "kmeans_clusters",
@@ -52,15 +54,6 @@ DEFAULT = [
 ]
 
 
-def _snapshot(df):
-    cols = sorted(df.columns)
-    rows = sorted(
-        tuple("NULL" if v is None else str(v) for v in (r[c] for c in cols))
-        for r in df.collect()
-    )
-    return cols, rows
-
-
 def _run(master: str, sf_dir: str, names: list[str]) -> dict:
     from pyspark.sql import SparkSession
 
@@ -83,7 +76,7 @@ def _run(master: str, sf_dir: str, names: list[str]) -> dict:
     out = {}
     for name in names:
         try:
-            out[name] = _snapshot(QUERIES[name].spark(spark, sf_dir))
+            out[name] = _snapshot(QUERIES[name].spark(spark, sf_dir).toPandas())
         except Exception as e:  # noqa: BLE001 - record, keep going
             out[name] = ("ERROR", f"{type(e).__name__}: {str(e)[:200]}")
     spark.stop()

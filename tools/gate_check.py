@@ -1,21 +1,29 @@
-"""Strict local mirror of the driver's correctness gate.
+"""Strict local mirror of the driver's correctness gate, over the WHOLE
+catalog: with no query names given, every entry of ``QUERIES`` runs on
+Spark and is compared against its DuckDB oracle.
 
-Differences from tests/test_oracle_parity.py (the fast dev loop):
 - STOCK SparkSession — no hobbes_spark.session confs. Any conf a query
   needs (nanos parquet, session tz) must be set by the query path
   itself, exactly as the driver requires (see ADVICE round 1).
-- sf0.01 by default (the driver's gate scale).
+- sf0.01 by default (the driver's gate scale); local[os.cpu_count()]
+  unless SPARK_GRAFT_CPUS says otherwise.
 - STRICT cell compare: str(v) with no int/float collapsing, so a
   DuckDB HUGEINT surfacing as pandas float64 ("42.0") mismatches a
   Spark BIGINT ("42") — the exact class of bug the driver's value hash
-  catches and the lenient snapshot masked (group_all_sum, round 1).
+  catches. ``_snapshot`` is the repo's one oracle compare:
+  tests/test_oracle_parity.py, tools/retry_gate.py and
+  tools/cluster_check.py import it from here.
 
-Usage: python tools/gate_check.py [sf_dir] [query ...|--window]
+Each MATCH line carries the query's Spark wall time, so one gate run
+also gives catalog-wide timing.
+
+Usage: python tools/gate_check.py [sf_dir] [query ...]
 """
 
 import math
 import os
 import sys
+import time
 
 import duckdb
 
@@ -43,53 +51,33 @@ def _snapshot(pdf):
     return cols, rows
 
 
-def _check_window_rotation():
-    """Rotation-due enforcement (r8 verdict item 1): `pytest tests/`
-    pins the window against queries.WINDOW_FROZEN_AT and stays green
-    across round boundaries; the LOUD "a newer record landed, rotate
-    the window" signal lives HERE, where the builder runs it every
-    round as part of the gate sweep.  --allow-stale-window overrides
-    (e.g. to re-verify an old window mid-rotation)."""
-    import glob
-    import re
-
-    from hobbes_spark.queries import WINDOW_FROZEN_AT
-
-    frozen = int(re.fullmatch(r"CORRECTNESS_r(\d+)", WINDOW_FROZEN_AT).group(1))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1))
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    ]
-    newest = max(rounds, default=0)
-    if newest > frozen:
-        raise SystemExit(
-            f"GATE: WINDOW ROTATION DUE — CORRECTNESS_r{newest:02d}.json "
-            f"landed but queries.WINDOW_FROZEN_AT is still "
-            f"{WINDOW_FROZEN_AT!r}.  Rotate _DRIVER_WINDOW_PRIORITY to "
-            f"`python tools/window_cohort.py --as-of {newest}` and bump "
-            f"the stamp (or pass --allow-stale-window to override)."
+def oracle_connection(sf_dir, tables=TABLES, glob=""):
+    """DuckDB connection with one view per table over
+    ``{sf_dir}/{table}.parquet{glob}`` (pass ``glob="/*.parquet"`` for
+    tables Spark wrote as directories)."""
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet{glob}')"
         )
+    return con
 
 
 def main():
     args = sys.argv[1:]
-    # sf_dir is optional: `gate_check.py --window` / `gate_check.py q1`
-    # must not eat the first operand as a directory
-    if args and not args[0].startswith("--") and os.path.isdir(args[0]):
+    # sf_dir is optional: `gate_check.py q1` must not eat the first
+    # operand as a directory
+    if args and os.path.isdir(args[0]):
         sf_dir, args = args[0], args[1:]
     else:
         sf_dir = "/root/testdata/sf0.01"
     only = set(args)
-    if "--allow-stale-window" in only:
-        only -= {"--allow-stale-window"}
-    else:
-        _check_window_rotation()
 
     from pyspark.sql import SparkSession
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("gate_check")
         .config("spark.sql.shuffle.partitions", "32")
         .getOrCreate()
@@ -98,17 +86,7 @@ def main():
 
     from hobbes_spark.queries import QUERIES
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    # --window: the exact 50 entries the driver will sign this round
-    # (combinable with explicit names)
-    if "--window" in only:
-        only = (only - {"--window"}) | set(list(QUERIES)[:50])
-        print(f"gate: --window -> {len(only)} entries")
+    con = oracle_connection(sf_dir)
 
     # a typo'd filter name must not produce a false green: a gate that
     # "passes" having checked nothing is worse than one that fails
@@ -117,17 +95,20 @@ def main():
         raise SystemExit(f"GATE: unknown query names {sorted(unknown)}")
 
     bad = []
+    t_gate = time.perf_counter()
     for name, spec in QUERIES.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             got = spec.spark(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001 - report, keep going
             bad.append((name, f"SPARK ERR {type(e).__name__}: {str(e)[:160]}"))
             print(f"\n{name}: SPARK ERROR {str(e)[:160]}")
             continue
+        wall = time.perf_counter() - t0
         if spec.oracle is None:
-            print(f"\n{name}: rows-only ({len(got)} rows) OK")
+            print(f"\n{name}: rows-only ({len(got)} rows) OK {wall:.2f}s")
             continue
         try:
             # record-and-continue like the Spark side: one bad oracle
@@ -147,9 +128,9 @@ def main():
             i = next(i for i, (a, b) in enumerate(zip(g_rows, e_rows)) if a != b)
             bad.append((name, f"values: spark={g_rows[i]} oracle={e_rows[i]}"))
         status = "MATCH" if not bad or bad[-1][0] != name else "MISMATCH"
-        print(f"\n{name}: {status} ({len(g_rows)} rows)")
+        print(f"\n{name}: {status} ({len(g_rows)} rows) {wall:.2f}s")
 
-    print(f"\nGATE: {len(bad)} failures")
+    print(f"\nGATE: {len(bad)} failures ({time.perf_counter() - t_gate:.0f}s)")
     for n, why in bad:
         print(f"\n  FAIL {n}: {why}")
     sys.exit(1 if bad else 0)

@@ -37,11 +37,10 @@ speculation checker clones) and yields rows REVERSED on any attempt
 differs — the same sharp edge as retry mode, now arriving through the
 speculation scheduler path.
 
-Both modes assert the perturbed snapshot (sorted stringified rows,
-same normalization as tools/gate_check.py) is byte-identical to CLEAN,
-and both carry a NEGATIVE CONTROL (an order-sensitive ``first()``
-probe) that must diverge — proving the injected perturbation actually
-fired.
+Both modes assert the perturbed snapshot (the strict ``_snapshot`` of
+tools/gate_check.py) is byte-identical to CLEAN, and both carry a
+NEGATIVE CONTROL (an order-sensitive ``first()`` probe) that must
+diverge — proving the injected perturbation actually fired.
 
 Usage: python tools/retry_gate.py [--speculation] [sf_dir] [query ...]
 Exit 0 = all identical; prints one "RETRYGATE <name> PASS|FAIL" line
@@ -51,12 +50,13 @@ to it).
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+from tools.gate_check import _snapshot  # noqa: E402
 
 # The flagship tie-sensitive shapes named by the r8 verdict.
 DEFAULT_TARGETS = [
@@ -224,22 +224,6 @@ def _start_speculation_cluster():
         "RETRYGATE [speculation]: executors on both loopback hosts "
         "never registered"
     )
-
-
-def _cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float) and math.isnan(v):
-        return "NULL"
-    return str(v)
-
-
-def _snapshot(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(_cell(v) for v in row) for row in pdf[cols].itertuples(index=False)
-    )
-    return cols, rows
 
 
 def main():
