@@ -30,6 +30,8 @@ matrix->matrix closure composition, `Reader.fs:86-95`).
 from __future__ import annotations
 
 import hashlib
+import os
+import stat
 from collections.abc import Sequence
 from functools import reduce as _reduce
 from typing import Optional, Union
@@ -55,8 +57,6 @@ def _nanos_ts_cols(path: str) -> list[str]:
     schema only (no row data touched). Empty when pyarrow is unavailable
     or the path isn't introspectable (e.g. a glob)."""
     try:
-        import os
-
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
@@ -88,6 +88,55 @@ def _nanos_ts_cols(path: str) -> list[str]:
         return []
 
 
+# path -> (applicationId, signature, nanos_cols, raw_schema). A slot is
+# written in one assignment and read into a local before it is compared,
+# so sync's worker threads never see half of an update.
+_SCHEMA_CACHE: dict = {}
+
+
+def _listing_signature(path: str):
+    """``os.stat`` identity of a parquet path: a file's ``(mtime_ns,
+    size)``; a directory's own mtime_ns plus ``(name, mtime_ns, size)``
+    of each top-level entry. An overwrite, an added or removed file and
+    a partition directory whose file set changed all alter it. ``None``
+    (nothing reused) when the path cannot be stat'ed, e.g. a glob or a
+    remote URI."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        with os.scandir(path) as it:
+            entries = []
+            for e in it:
+                est = e.stat()
+                entries.append((e.name, est.st_mtime_ns, est.st_size))
+        return (st.st_mtime_ns, tuple(sorted(entries)))
+    except OSError:
+        return None
+
+
+def _read_raw_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """``spark.read.parquet(path)`` before any nanos fix-up, plus the
+    TIMESTAMP(NANOS) column names, with ``nanosAsLong`` flipped on when
+    there are any. Only the schema is remembered (``_SCHEMA_CACHE``),
+    never data."""
+    app = spark.sparkContext.applicationId
+    sig = _listing_signature(path)
+    slot = _SCHEMA_CACHE.get(path)
+    if slot is not None and slot[:2] == (app, sig):
+        nanos, schema = slot[2], slot[3]
+    else:
+        nanos, schema = _nanos_ts_cols(path), None
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path), nanos
+    df = spark.read.parquet(path)
+    if sig is not None:
+        _SCHEMA_CACHE[path] = (app, sig, nanos, df.schema)
+    return df, nanos
+
+
 def read_parquet_any_ts(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` that tolerates TIMESTAMP(NANOS) columns.
 
@@ -100,6 +149,13 @@ def read_parquet_any_ts(spark: SparkSession, path: str) -> DataFrame:
     nanosecond longs and are truncated to microsecond timestamps
     in-plan.
 
+    The schema is resolved once per session, path and listing signature
+    (see ``_listing_signature``): the first read still infers it with a
+    Spark job, and every later read of the unchanged path hands it to
+    the reader and launches none. An in-place rewrite of a file nested
+    below a partition directory leaves the signature alone; Spark's own
+    writers never do that, they add new files.
+
     The conf deliberately stays set afterwards: parquet scans re-consult
     it per file at EXECUTION time, and these DataFrames are lazy — an
     eager reset would blow up the very scan this function just built.
@@ -108,10 +164,7 @@ def read_parquet_any_ts(spark: SparkSession, path: str) -> DataFrame:
     loudly; the sniff therefore walks directories (including one
     partition level) so that case is confined to exotic paths, and
     callers hitting it see bigint columns rather than silent truncation."""
-    nanos = _nanos_ts_cols(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df, nanos = _read_raw_parquet(spark, path)
     dtypes = dict(df.dtypes)
     for colname in nanos:
         # INT96 columns also footer-sniff as timestamp[ns] via pyarrow,

@@ -14,8 +14,9 @@ Everything here is engine-side semantics, not transport: ``$filter``
 compiles to a native Column predicate (codegen, pushdown-eligible —
 a served filter prunes the parquet scan like any other), ``$select``
 prunes columns, ``$orderby``/``$top``/``$skip`` become
-sort/limit/offset, and the envelope emitter streams ``toLocalIterator``
-so serving a page never collects the full table to the driver. An HTTP
+sort/limit/offset, and the envelope emitter collects a bounded page and
+streams an unbounded one through ``toLocalIterator``, so serving a page
+never collects the full table to the driver. An HTTP
 wrapper is a ~10-line flask/fastapi handler around
 :func:`odata_response`; it is deliberately NOT included (no server
 dependencies in the engine), matching the reference's split between the
@@ -470,13 +471,18 @@ def odata_response(
     ``@odata.count`` when ``$count=true``, and ``@odata.nextLink`` when
     a server ``page_size`` truncates the result.
 
-    Rows stream via ``toLocalIterator`` — one partition in driver
-    memory at a time, so serving page N of a 100 TB table materializes
-    one page, not the table. ``base_url`` is only needed when paging
-    (the nextLink must point somewhere). When the client sent its own
-    ``$top``, the nextLink re-issues the REMAINING top (client cap
-    minus rows already served) so following every nextLink delivers
-    exactly ``$top`` rows in total, never more.
+    A page bounded by ``$top`` or ``page_size`` is taken with one
+    ``collect()``: at most ``$top`` or ``page_size + 1`` rows reach the
+    driver, and a sorted page's top-k merges on the driver in one job
+    (through ``toLocalIterator`` it would first shuffle a multi-partition
+    input into one partition). An unbounded response streams via
+    ``toLocalIterator``, one partition in driver memory at a time, so
+    serving a 100 TB table never holds more than the rows it emits.
+    ``base_url`` is only needed when paging (the nextLink must point
+    somewhere). When the client sent its own ``$top``, the nextLink
+    re-issues the REMAINING top (client cap minus rows already served)
+    so following every nextLink delivers exactly ``$top`` rows in
+    total, never more.
     """
     options = options or {}
     out: dict = {"@odata.context": context}
@@ -487,21 +493,22 @@ def odata_response(
         # compiled predicate via the shared _apply core
         out["@odata.count"] = filtered.count()
 
+    client_top = _opt(options, "$top")
     if page_size is not None:
         probe = shaped.limit(page_size + 1)
     else:
         probe = shaped
+    bounded = page_size is not None or client_top is not None
     cols = probe.columns
     rows = []
     truncated = False
-    for row in probe.toLocalIterator():
+    for row in probe.collect() if bounded else probe.toLocalIterator():
         if page_size is not None and len(rows) >= page_size:
             truncated = True
             break
         rows.append({c: _json_cell(v) for c, v in zip(cols, row)})
     out["value"] = rows
 
-    client_top = _opt(options, "$top")
     remaining_top = None
     if truncated and client_top is not None:
         remaining_top = int(client_top) - len(rows)

@@ -30,14 +30,6 @@ def stream_events(
     event files. Returns a streaming DataFrame with a proper
     ``ts: timestamp`` column.
     """
-    from hobbes_spark.pipeline import _nanos_ts_cols
-
-    # Flip the nanos escape hatch before ANY read in this session touches
-    # the file — a stock session (the driver's correctness gate) rejects
-    # TIMESTAMP(NANOS) parquet otherwise. The raw long schema is what the
-    # stream reader needs; normalize_ts converts after.
-    if _nanos_ts_cols(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_ts(stream_parquet(spark, path, max_files_per_trigger))
 
 
@@ -53,8 +45,15 @@ def stream_parquet(
     single-file-symlink-dir workaround has ONE spelling. Batch
     curation operators are stateless Column expressions, so they run
     UNCHANGED on the returned stream; only aggregations need
-    streaming-specific handling downstream."""
-    static = spark.read.parquet(path)
+    streaming-specific handling downstream.
+
+    The schema comes from the same once-per-listing resolver as
+    ``read_parquet_any_ts``, which also flips ``nanosAsLong`` for a
+    TIMESTAMP(NANOS) source (a stock session rejects it otherwise); the
+    stream then carries those columns as raw nanosecond longs."""
+    from hobbes_spark.pipeline import _read_raw_parquet
+
+    static, _ = _read_raw_parquet(spark, path)
     # FileStreamSource wants a directory (its basePath); a single-file
     # table is exposed through a symlink dir.
     if os.path.isfile(path):

@@ -179,11 +179,14 @@ def _key_of(cfg: Configuration, child_keys: Mapping[str, str]) -> str:
 
 def read_cached(spark: SparkSession, cache_dir: str, key: str) -> DataFrame:
     """Read a materialized cache entry (the ``fromCache`` analog,
-    `workers/calculator.worker/src/Program.fs:7-15`)."""
+    `workers/calculator.worker/src/Program.fs:7-15`). A warm read of
+    an unchanged entry launches no Spark job (``read_parquet_any_ts``)."""
+    from hobbes_spark.pipeline import read_parquet_any_ts
+
     path = os.path.join(cache_dir, key)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         raise FileNotFoundError(f"No data for that key ({key})")
-    return spark.read.parquet(path)
+    return read_parquet_any_ts(spark, path)
 
 
 def _compute(
@@ -318,8 +321,9 @@ def sync_configurations(
                     if cfg.format_json:
                         from hobbes_spark.sources.sinks import to_data_result_json
 
+                        written = read_cached(spark, cache_dir, key)
                         with open(path + ".json", "w") as f:
-                            f.write(to_data_result_json(spark.read.parquet(path)))
+                            f.write(to_data_result_json(written))
                     with lock:
                         report.statuses[name] = "done"
                         report.attempts[name] = attempt

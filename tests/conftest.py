@@ -1,3 +1,4 @@
+import itertools
 import os
 
 import pytest
@@ -19,3 +20,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` in a job group of its own and
+    returns ``(result, Spark jobs it launched, their stages)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{next(_JOB_GROUPS)}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        # job-start events reach the status store through the listener
+        # bus; drain it so the count is complete
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+        return out, len(jobs), stages
+
+    return run

@@ -6,13 +6,16 @@ using the reference's own programs where possible.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
 from hobbes_spark.hb import parse_program, run_hb_program
 from hobbes_spark.sources.odata import odata_url, read_odata
+from test_hb import HB_DIR  # where the reference's .hb programs live
 
-FLOWERPOT = open("/root/reference/tests/transformations/flowerpot.hb").read()
+FLOWERPOT = f"{HB_DIR}/flowerpot.hb"
+COMMIT_FREQUENCY = f"{HB_DIR}/Logic Commit Frequency.hb"
 
 
 def _revision(wid, rev, sprint, wtype="User Story", cat="Completed", state="Closed"):
@@ -88,12 +91,14 @@ def test_odata_pagination_and_flattening(spark):
     assert df.filter(df["LeadTimeDays"].isNull()).count() > 0
 
 
+@pytest.mark.skipif(not os.path.exists(FLOWERPOT), reason="reference fixture absent")
 def test_flowerpot_hb_via_odata_provider(spark):
     """The reference's flowerpot.hb, header included, end-to-end against
     the fake feed: provider resolution reads url/select/filter/expand
     from the program itself."""
     pages = _odata_pages()
-    out = run_hb_program(spark, FLOWERPOT, fetcher=_fetcher(pages))
+    with open(FLOWERPOT) as f:
+        out = run_hb_program(spark, f.read(), fetcher=_fetcher(pages))
     rows = out.collect()
     assert rows
     assert {"Sprint Name", "Sprint Number", "State", "WorkItemId"} <= set(out.columns)
@@ -101,12 +106,17 @@ def test_flowerpot_hb_via_odata_provider(spark):
     assert all(1 <= r["Sprint Number"] <= 4 for r in rows)
 
 
-def test_rest_multi_url(spark):
-    """Many-URL rest source with a values: field (Commit Frequency shape)."""
-    prog = parse_program(open("/root/reference/tests/transformations/Logic Commit Frequency.hb").read())
+@pytest.mark.skipif(not os.path.exists(COMMIT_FREQUENCY), reason="reference fixture absent")
+def test_reference_commit_frequency_header():
+    """The reference program the multi-URL shape below is taken from."""
+    with open(COMMIT_FREQUENCY) as f:
+        prog = parse_program(f.read())
     assert isinstance(prog.properties["url"], list) and len(prog.properties["url"]) == 15
     assert prog.properties["values"] == "value"
 
+
+def test_rest_multi_url(spark):
+    """Many-URL rest source with a values: field (Commit Frequency shape)."""
     body = json.dumps(
         {"value": [{"commitId": "a", "committer": {"date": "2020-01-01T10:00:00Z"}},
                    {"commitId": "b", "committer": {"date": "2020-01-02T10:00:00Z"}}]}

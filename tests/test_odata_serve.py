@@ -232,6 +232,39 @@ def test_envelope_roundtrips_through_ingest(spark):
     assert sorted(r["y"] for r in back.collect()) == [i * 2 for i in range(12)]
 
 
+def test_top_page_is_one_job(spark, orders, spark_jobs):
+    """A ``$top`` page is one job, and over a multi-partition input one
+    stage: the top-k merges on the driver, no shuffle into one partition."""
+    options = {"$orderby": "o_totalprice desc,o_orderkey", "$top": "7"}
+    resp, jobs, _ = spark_jobs(lambda: odata_response(orders, options))
+    assert jobs == 1
+    assert len(resp["value"]) == 7
+
+    df = spark.range(0, 1000, 1, 4).select("id", (F.col("id") % 7).alias("m"))
+    resp, jobs, stages = spark_jobs(
+        lambda: odata_response(df, {"$orderby": "m desc,id", "$top": "5"})
+    )
+    assert (jobs, stages) == (1, 1)
+    assert [r["id"] for r in resp["value"]] == [6, 13, 20, 27, 34]
+
+
+def test_top_page_equals_unbounded_slice(orders):
+    """The collected ``$top`` page is exactly the streamed unbounded
+    response sliced in Python: same rows, same order, same cells."""
+    options = {
+        "$filter": "o_totalprice gt 100000",
+        "$orderby": "o_orderdate desc,o_orderkey",
+        "$select": "o_orderkey,o_orderdate,o_totalprice",
+    }
+    everything = odata_response(orders, options)["value"]
+    assert len(everything) > 40
+    for skip, top in ((0, 10), (7, 25), (len(everything) - 3, 10)):
+        page = odata_response(
+            orders, {**options, "$skip": str(skip), "$top": str(top)}
+        )["value"]
+        assert page == everything[skip:skip + top]
+
+
 # --------------------------------------------------------------------- #
 # Review-hardening regressions
 # --------------------------------------------------------------------- #

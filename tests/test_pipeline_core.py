@@ -543,9 +543,102 @@ def test_nanos_sniff_handles_tz_aware_and_partitioned(tmp_path, spark):
     pq.write_table(tbl, part / "k=1" / "part0.parquet")
     assert _nanos_ts_cols(str(part)) == ["t"]
 
-    df = read_parquet_any_ts(spark, str(flat))
-    assert dict(df.dtypes)["t"].startswith("timestamp")
-    assert df.count() == 1
+    # the first read infers, the second reuses the schema: both must
+    # still carry the micros fix-up (the partition column rides along)
+    for path in (flat, part):
+        first = read_parquet_any_ts(spark, str(path))
+        warm = read_parquet_any_ts(spark, str(path))
+        assert warm.schema == first.schema
+        assert dict(warm.dtypes)["t"].startswith("timestamp")
+        assert warm.collect() == first.collect()
+        assert warm.count() == 1
+
+
+def _write(spark, path, cols):
+    spark.createDataFrame([tuple(range(len(cols)))], cols).write.mode(
+        "overwrite"
+    ).parquet(str(path))
+
+
+def test_schema_cache_warm_read_equals_first_read(spark, sf_dir, tmp_path, spark_jobs):
+    """The warm read hands Spark the remembered schema and launches no
+    job, yet yields the same schema and the same plan identity
+    (``semanticHash`` keys sync's non-local inline tables)."""
+    path = str(tmp_path / "t")
+    _write(spark, path, ["a", "b"])
+    first, cold_jobs, _ = spark_jobs(lambda: read_parquet_any_ts(spark, path))
+    warm, warm_jobs, _ = spark_jobs(lambda: read_parquet_any_ts(spark, path))
+    assert (cold_jobs, warm_jobs) == (1, 0)
+    assert warm.schema == first.schema
+    assert warm.semanticHash() == first.semanticHash()
+    assert warm.collect() == first.collect()
+
+    Pipeline.table(spark, sf_dir, "orders")
+    table, jobs, _ = spark_jobs(lambda: Pipeline.table(spark, sf_dir, "orders"))
+    assert jobs == 0 and table.df.count() > 0
+
+
+def test_schema_cache_never_serves_a_stale_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark_dir = str(tmp_path / "dir")
+    _write(spark, spark_dir, ["a", "b"])
+    assert read_parquet_any_ts(spark, spark_dir).columns == ["a", "b"]
+    _write(spark, spark_dir, ["x", "y", "z"])
+    assert read_parquet_any_ts(spark, spark_dir).columns == ["x", "y", "z"]
+
+    flat = str(tmp_path / "flat.parquet")
+    pq.write_table(pa.table({"a": [1]}), flat)
+    assert read_parquet_any_ts(spark, flat).columns == ["a"]
+    pq.write_table(pa.table({"a": [1], "b": ["two"]}), flat)
+    df = read_parquet_any_ts(spark, flat)
+    assert df.columns == ["a", "b"] and df.collect()[0]["b"] == "two"
+
+
+def test_schema_cache_is_per_session(spark, tmp_path, spark_jobs):
+    """A slot filled by another application is re-resolved, not reused:
+    another session may infer differently."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from hobbes_spark.pipeline import _SCHEMA_CACHE
+
+    path = str(tmp_path / "t")
+    _write(spark, path, ["a", "b"])
+    want = read_parquet_any_ts(spark, path).schema
+    _, sig, nanos, _ = _SCHEMA_CACHE[path]
+    bogus = StructType([StructField("zz", LongType())])
+    _SCHEMA_CACHE[path] = ("another-application", sig, nanos, bogus)
+    df, jobs, _ = spark_jobs(lambda: read_parquet_any_ts(spark, path))
+    assert df.schema == want and jobs == 1
+    assert _SCHEMA_CACHE[path][0] == spark.sparkContext.applicationId
+
+
+def test_schema_cache_concurrent_readers_agree(spark, tmp_path):
+    """Eight threads (more than the test cores) race the cold read of one
+    path, with a short switch interval so they interleave inside it."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hobbes_spark.pipeline import _SCHEMA_CACHE
+
+    path = str(tmp_path / "t")
+    _write(spark, path, ["a", "b", "c"])
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [
+                pool.submit(lambda: read_parquet_any_ts(spark, path).schema)
+                for _ in range(8)
+            ]
+            schemas = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert [f.name for f in schemas[0]] == ["a", "b", "c"]
+    assert schemas == [schemas[0]] * 8
+    app, _, _, cached = _SCHEMA_CACHE[path]
+    assert (app, cached) == (spark.sparkContext.applicationId, schemas[0])
 
 
 def test_winsorize_keeps_null_keyed_groups(spark):

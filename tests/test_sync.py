@@ -99,6 +99,18 @@ def test_resync_is_all_cache_hits(spark, tmp_path):
     assert third.cache_keys["base"] != first.cache_keys["base"]
 
 
+def test_warm_read_cached_launches_no_job(spark, tmp_path, spark_jobs):
+    """A served entry's schema is resolved once; every later read of the
+    unchanged entry is pure plan building."""
+    cache = str(tmp_path / "cache")
+    rep = sync_configurations(spark, _dag(), cache)
+    key = rep.cache_keys["joined"]  # format_json already read it once
+    warm, jobs, _ = spark_jobs(lambda: read_cached(spark, cache, key))
+    assert jobs == 0
+    assert warm.schema == spark.read.parquet(os.path.join(cache, key)).schema
+    assert warm.count() == 3
+
+
 def test_failure_dead_letters_and_blocks_dependents(spark, tmp_path):
     cache = str(tmp_path / "cache")
     bad = BASE + "create column boom (nope_column * 2)\n"
