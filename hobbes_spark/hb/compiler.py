@@ -271,6 +271,6 @@ def run_hb(
     ``run_hb_program``, which resolves providers itself); this
     convenience entry point takes an already-resolved source."""
     if isinstance(source, DataFrame):
-        source = Pipeline.of(source, "hb-source")
+        source = Pipeline(source)
     _, run = compile_hb(text)
     return run(source)

@@ -55,7 +55,7 @@ def resolve_source(
 
     if provider == "localdata":
         if tables and name in (tables or {}):
-            return Pipeline.of(tables[name], f"localdata:{name}")
+            return Pipeline(tables[name])
         cols = properties.get("columns")
         rows = properties.get("rows")
         if cols and rows is not None:
@@ -68,7 +68,7 @@ def resolve_source(
             if isinstance(cols, str):
                 cols = cols.split()
             rows = [json.loads(r) if isinstance(r, str) else r for r in rows]
-            return Pipeline.of(local_data(spark, cols, rows), "localdata:inline")
+            return Pipeline(local_data(spark, cols, rows))
         raise ValueError(
             f"localdata needs an inline columns/rows pair or a table named "
             f"{name!r} passed via tables="
@@ -88,7 +88,7 @@ def resolve_source(
             filter=_get(properties, "filter"),
             expand=_get(properties, "expand"),
         )
-        return Pipeline.of(read_odata(spark, url, fetcher), f"odata:{url}")
+        return Pipeline(read_odata(spark, url, fetcher))
 
     if provider == "git":
         # the git.worker's job on a local clone (`.gitmodules:16-18`;
@@ -99,7 +99,7 @@ def resolve_source(
         path = _get(properties, "url") or _get(properties, "path")
         if not path:
             raise ValueError("provider: git needs a url/path to a local clone")
-        return Pipeline.of(read_git_commits(spark, path), f"git:{path}")
+        return Pipeline(read_git_commits(spark, path))
 
     if provider == "rest":
         if fetcher is None:
@@ -114,9 +114,8 @@ def resolve_source(
         if isinstance(urls, str):
             urls = [urls]
         pages = [fetcher(u) for u in urls]
-        return Pipeline.of(
-            rest_pages(spark, pages, values_field=_get(properties, "values")),
-            "rest",
+        return Pipeline(
+            rest_pages(spark, pages, values_field=_get(properties, "values"))
         )
 
     if provider == "merge":
@@ -137,9 +136,7 @@ def resolve_source(
             )
         from hobbes_spark.operators.combinators import merge as _merge
 
-        return _merge(
-            *[Pipeline.of(tables[d], f"dataset:{d}") for d in ids]
-        )
+        return _merge(*[Pipeline(tables[d]) for d in ids])
 
     if provider == "join":
         # workbench Source.Join (Types.fs:58-63): single-field equi-join
@@ -157,11 +154,7 @@ def resolve_source(
             )
         from hobbes_spark.operators.combinators import join as _join
 
-        return _join(
-            Pipeline.of(tables[left], f"dataset:{left}"),
-            Pipeline.of(tables[right], f"dataset:{right}"),
-            field_name,
-        )
+        return _join(Pipeline(tables[left]), Pipeline(tables[right]), field_name)
 
     raise ValueError(f"unknown provider {provider!r}")
 

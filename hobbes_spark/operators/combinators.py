@@ -3,7 +3,9 @@
 These are the reference's *dataset-level* operators, configured between
 cached pipelines rather than inline DSL statements
 (`common/hobbes.messaging/src/Broker.fs:81-92`,
-`workers/calculator.worker/src/Processer.fs:17-32`).
+`workers/calculator.worker/src/Processer.fs:17-32`). Their results are
+cached by sync under the ``MergeMessage`` / ``JoinMessage`` keys
+(``sync._key_of``), not here.
 """
 
 from __future__ import annotations
@@ -29,8 +31,7 @@ def merge(*pipelines):
         raise ValueError("merge needs at least one dataset")
     dfs = [p.df for p in pipelines]
     out = _reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
-    lineage = ("merge[" + ",".join(p.cache_key()[:8] for p in pipelines) + "]",)
-    return Pipeline(out, lineage=lineage)
+    return Pipeline(out)
 
 
 def join(left, right, field: str, how: str = "outer", broadcast: bool = False):
@@ -49,5 +50,4 @@ def join(left, right, field: str, how: str = "outer", broadcast: bool = False):
 
     rdf = F.broadcast(right.df) if broadcast else right.df
     out = left.df.join(rdf, on=field, how=how)
-    lineage = left.lineage + (f"join[{field},{how},{right.cache_key()[:8]}]",)
-    return Pipeline(out, key_cols=(field,), lineage=lineage)
+    return Pipeline(out, key_cols=(field,))

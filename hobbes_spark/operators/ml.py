@@ -48,10 +48,7 @@ def buckets(pipeline, n: int, reduction: str):
     bucket = F.least(((rn - 1) / size).cast("long") + 1, F.lit(n))
     out = _agg_numeric(df.withColumn("bucket", bucket), "bucket", reduction)
     return pipeline._step(
-        out.orderBy("bucket"),
-        f"buckets {n} {reduction}",
-        key_cols=("bucket",),
-        order=(("bucket", True),),
+        out.orderBy("bucket"), key_cols=("bucket",), order=(("bucket", True),)
     )
 
 
@@ -83,7 +80,7 @@ def kmeans(pipeline, k: int, reduction: str, seed: int = 42):
     pred = pred.withColumn("cluster", mapping[F.col("__cluster")]).drop("__cluster")
     out = _agg_numeric(pred, "cluster", reduction)
     return pipeline._step(
-        out.orderBy("cluster"), f"k-means {k} {reduction}", key_cols=("cluster",), order=(("cluster", True),)
+        out.orderBy("cluster"), key_cols=("cluster",), order=(("cluster", True),)
     )
 
 
@@ -198,10 +195,7 @@ def kmeans_lloyd(
         clean.withColumn("cluster", assign(centers)), "cluster", reduction
     )
     return pipeline._step(
-        out.orderBy("cluster"),
-        f"k-means-lloyd {k} {reduction}",
-        key_cols=("cluster",),
-        order=(("cluster", True),),
+        out.orderBy("cluster"), key_cols=("cluster",), order=(("cluster", True),)
     )
 
 
@@ -262,7 +256,7 @@ def each(pipeline, reduction: str):
         out = df.select(
             *[c(k).alias(k) for k in keys], F.when(n > 0, val).alias("value")
         )
-    return pipeline._step(out, f"each {reduction}")
+    return pipeline._step(out)
 
 
 def linear_regression(pipeline, x_col, y_col):
@@ -277,7 +271,7 @@ def linear_regression(pipeline, x_col, y_col):
         F.regr_r2(y, x).alias("r2"),
         F.regr_count(y, x).alias("n"),
     )
-    return pipeline._step(out, "linear regression", key_cols=(), order=())
+    return pipeline._step(out, key_cols=(), order=())
 
 
 def linear_extrapolation(pipeline, value_col: str, n_pred: int, n_train: int):
@@ -340,7 +334,4 @@ def linear_extrapolation(pipeline, value_col: str, n_pred: int, n_train: int):
         .withColumnRenamed("__i", "ordinal")
         .orderBy("ordinal")
     )
-    return pipeline._step(
-        out, f"linear extrapolation {value_col} {n_pred} {n_train}",
-        order=(("ordinal", True),),
-    )
+    return pipeline._step(out, order=(("ordinal", True),))

@@ -24,12 +24,14 @@ For window functions over *raw* data at 100 TB, every windowed method
 takes ``partition_by=`` to keep the shuffle keyed.
 
 Every method returns a new ``Pipeline`` (immutable, like the reference's
-matrix->matrix closure composition, `Reader.fs:86-95`).
+matrix->matrix closure composition, `Reader.fs:86-95`). A ``Pipeline``
+carries no cache key: the engine's one result cache is sync's parquet
+cache (``sync._key_of`` / ``sync.read_cached``), which keys whole
+configurations the way the reference keys ``md5(source):t1:t2``.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import stat
 from collections.abc import Sequence
@@ -185,27 +187,19 @@ class Pipeline:
         df: DataFrame,
         key_cols: tuple[str, ...] = (),
         order: tuple[tuple[str, bool], ...] = (),
-        lineage: tuple[str, ...] = (),
     ):
         self._df = df
         self.key_cols = tuple(key_cols)
         #: ((column_name, ascending), ...) — the current row order
         self.order = tuple(order)
-        #: op descriptions, for per-prefix cache keys (reference
-        #: `tools/workbench/src/Types.fs:176-184`)
-        self.lineage = tuple(lineage)
 
     # ------------------------------------------------------------------ #
     # construction
     # ------------------------------------------------------------------ #
 
     @classmethod
-    def of(cls, df: DataFrame, source_id: str = "df") -> "Pipeline":
-        return cls(df, lineage=(source_id,))
-
-    @classmethod
     def from_parquet(cls, spark: SparkSession, path: str) -> "Pipeline":
-        return cls(read_parquet_any_ts(spark, path), lineage=(f"parquet:{path}",))
+        return cls(read_parquet_any_ts(spark, path))
 
     @classmethod
     def table(cls, spark: SparkSession, sf_dir: str, name: str) -> "Pipeline":
@@ -228,7 +222,6 @@ class Pipeline:
     def _step(
         self,
         df: DataFrame,
-        op: str,
         key_cols: Optional[tuple[str, ...]] = None,
         order: Optional[tuple[tuple[str, bool], ...]] = None,
     ) -> "Pipeline":
@@ -236,19 +229,7 @@ class Pipeline:
             df,
             key_cols=self.key_cols if key_cols is None else key_cols,
             order=self.order if order is None else order,
-            lineage=self.lineage + (op,),
         )
-
-    def cache_key(self) -> str:
-        """md5 over source + op prefix — the reference's cache-key scheme
-        (`tools/workbench/src/Types.fs:176-184`). Joined on a byte that
-        cannot appear inside an op string (op entries themselves contain
-        ``:`` — ``parquet:path`` — so a printable join would alias
-        ('a:b',) with ('a','b'))."""
-        return hashlib.md5("\x1f".join(self.lineage).encode()).hexdigest()
-
-    def explain(self, mode: str = "formatted") -> None:
-        self._df.explain(mode)
 
     def _order_exprs(self) -> list[Column]:
         if not self.order:
@@ -277,16 +258,14 @@ class Pipeline:
 
         ``only True`` is the identity pass-through (reference
         `General.fs:66-68`); ``only False`` drops every row (plain bools
-        must not reach ``df.filter``, which rejects them). The predicate's
-        rendered form joins the lineage so two pipelines differing only
-        in their filter get distinct cache keys.
+        must not reach ``df.filter``, which rejects them).
         Reference: snippets:76-83, `flowerpot.hb:12`.
         """
         if cond is True:
-            return self._step(self._df, "only true")
+            return self
         if cond is False:
-            return self._step(self._df.filter(F.lit(False)), "only false")
-        return self._step(self._df.filter(cond), f"only {cond}")
+            return self._step(self._df.filter(F.lit(False)))
+        return self._step(self._df.filter(cond))
 
     # ------------------------------------------------------------------ #
     # §2.2 projection / column ops
@@ -301,7 +280,6 @@ class Pipeline:
         keep = [n for n in names if n in self._df.columns]
         return self._step(
             self._df.select(*[c(n) for n in keep]),
-            f"slice columns {' '.join(names)}",
             key_cols=self._surviving_keys(keep),
             order=self._surviving_order(keep),
         )
@@ -317,7 +295,7 @@ class Pipeline:
             .filter((F.col("__slice_ord") >= start) & (F.col("__slice_ord") <= end))
             .drop("__slice_ord")
         )
-        return self._step(out, f"slice rows {start} {end}")
+        return self._step(out)
 
     def rename_column(self, old: str, new: str) -> "Pipeline":
         """``rename column a b`` (snippets:11-17, `flowerpot.hb:15`).
@@ -337,7 +315,6 @@ class Pipeline:
         ren = lambda n: new if n == old else n  # noqa: E731
         return self._step(
             out,
-            f"rename {old} {new}",
             key_cols=tuple(ren(k) for k in self.key_cols),
             order=tuple((ren(n), a) for n, a in self.order),
         )
@@ -349,9 +326,7 @@ class Pipeline:
         Plain strings are treated as *literals* here (DSL string literal);
         pass a Column to reference other columns."""
         col = expr if isinstance(expr, Column) else F.lit(expr)
-        # the rendered expression joins the op so two pipelines creating
-        # the same column name from different expressions cache apart
-        return self._step(self._df.withColumn(name, col), f"create {name} {col}")
+        return self._step(self._df.withColumn(name, col))
 
     def dense_columns(self, max_null_fraction: float = 0.0) -> "Pipeline":
         """``dense columns`` — drop columns with missing values
@@ -368,7 +343,6 @@ class Pipeline:
         keep = [col for col in cols if (fracs[col] or 0.0) <= max_null_fraction]
         return self._step(
             self._df.select(*[c(n) for n in keep]),
-            "dense columns",
             key_cols=self._surviving_keys(keep),
             order=self._surviving_order(keep),
         )
@@ -380,7 +354,7 @@ class Pipeline:
             lambda a, b: a + b,
             [c(col).isNull().cast("int") for col in self._df.columns],
         )
-        return self._step(self._df.filter(null_count <= max_missing), "dense rows")
+        return self._step(self._df.filter(null_count <= max_missing))
 
     def numeric_columns(self) -> "Pipeline":
         """``numeric columns`` — keep only numeric columns (snippets:52-58).
@@ -392,7 +366,6 @@ class Pipeline:
         ]
         return self._step(
             self._df.select(*[c(n) for n in keep]),
-            "numeric columns",
             order=self._surviving_order(keep),
         )
 
@@ -405,11 +378,7 @@ class Pipeline:
         windowed ops use (snippets:68-74, `Velocity.hb:29`)."""
         order = tuple((n, ascending) for n in cols)
         exprs = [c(n).asc() if asc else c(n).desc() for n, asc in order]
-        return self._step(
-            self._df.orderBy(*exprs),
-            f"sort by {cols} {'asc' if ascending else 'desc'}",
-            order=order,
-        )
+        return self._step(self._df.orderBy(*exprs), order=order)
 
     def index_by(self, *cols: str) -> "Pipeline":
         """``index rows by col`` — re-key rows; "mostly relevant when
@@ -420,7 +389,7 @@ class Pipeline:
         missing = [n for n in cols if n not in self._df.columns]
         if missing:
             raise ValueError(f"index by unknown column(s) {missing}")
-        return self._step(self._df, f"index by {cols}", key_cols=tuple(cols))
+        return self._step(self._df, key_cols=tuple(cols))
 
     def keys_col(self) -> Column:
         """The ``keys`` expression — current row key as a value
@@ -496,12 +465,7 @@ class Pipeline:
             # treats NULL and 0 differently. Only `count` gets this fill:
             # for sum/mean/etc. an empty cell has no defined value.
             out = out.fillna(0, subset=[f for f in out.columns if f not in row_keys])
-        return self._step(
-            out,
-            f"pivot {row_keys} {col_key} {reduction} {value_col}",
-            key_cols=tuple(row_keys),
-            order=(),
-        )
+        return self._step(out, key_cols=tuple(row_keys), order=())
 
     def unpivot(
         self,
@@ -519,12 +483,7 @@ class Pipeline:
         out = self._df.unpivot(
             [c(k) for k in ids], [c(v) for v in values], var_name, value_name
         )
-        return self._step(
-            out,
-            f"unpivot {list(ids)} {list(values)}",
-            key_cols=tuple([*ids, var_name]),
-            order=(),
-        )
+        return self._step(out, key_cols=tuple([*ids, var_name]), order=())
 
     # ------------------------------------------------------------------ #
     # §2.8 windowed series — implemented in operators/windows.py,
@@ -548,7 +507,7 @@ class Pipeline:
         from hobbes_spark.operators.windows import moving_col
 
         col = moving_col(reduction, n, c(value_col), self._order_exprs(), partition_by)
-        return self._step(self._df.withColumn(out_name, col), f"moving {reduction} {n}")
+        return self._step(self._df.withColumn(out_name, col))
 
     def expanding(
         self,
@@ -562,7 +521,7 @@ class Pipeline:
         from hobbes_spark.operators.windows import expanding_col
 
         col = expanding_col(reduction, c(value_col), self._order_exprs(), partition_by)
-        return self._step(self._df.withColumn(out_name, col), f"expanding {reduction}")
+        return self._step(self._df.withColumn(out_name, col))
 
     # ------------------------------------------------------------------ #
     # §2.9 / §2.8 ML & series ops — implemented in operators/ml.py
@@ -645,10 +604,6 @@ class Pipeline:
         shuffle + merge, no cross product."""
         return self._step(
             self._df.intersect(self._aligned_for_setop(other, "intersect_rows")),
-            # embed the right side's identity: a bare op string would give
-            # a∩b and a∩c the same cache_key and cross-serve checkpoints
-            f"intersect:{other.cache_key()}",
-            key_cols=self.key_cols,
             order=(),
         )
 
@@ -658,17 +613,12 @@ class Pipeline:
         shuffle shape as intersect."""
         return self._step(
             self._df.subtract(self._aligned_for_setop(other, "except_rows")),
-            f"except:{other.cache_key()}",
-            key_cols=self.key_cols,
             order=(),
         )
 
     # ------------------------------------------------------------------ #
     # materialization
     # ------------------------------------------------------------------ #
-
-    def to_df(self) -> DataFrame:
-        return self._df
 
     def collect(self):
         return self._df.collect()
@@ -704,8 +654,7 @@ class GroupedPipeline:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        op = f"group by {self.keys} -> {'maxby' if descending else 'minby'}"
-        return self.parent._step(out, op, key_cols=self.keys, order=())
+        return self.parent._step(out, key_cols=self.keys, order=())
 
     def maxby(self, expr: ColumnLike, tiebreak: Sequence[ColumnLike] = ()) -> Pipeline:
         """``group by ks -> maxby expr`` — e.g. latest revision per
@@ -754,22 +703,16 @@ class GroupedPipeline:
             out = df.groupBy(*[c(k) for k in self.keys]).count().drop("count")
         else:
             out = df.groupBy(*[c(k) for k in self.keys]).agg(*aggs)
-        return self.parent._step(
-            out, f"group by {self.keys} -> {reduction}", key_cols=self.keys, order=()
-        )
+        return self.parent._step(out, key_cols=self.keys, order=())
 
     def count_rows(self) -> Pipeline:
         """``group by ks -> count`` as used for daily commit counts
         (`Git.fs:12-17`): one ``count`` column of group sizes."""
         out = self.parent.df.groupBy(*[c(k) for k in self.keys]).agg(F.count(F.lit(1)).alias("count"))
-        return self.parent._step(
-            out, f"group by {self.keys} -> count_rows", key_cols=self.keys, order=()
-        )
+        return self.parent._step(out, key_cols=self.keys, order=())
 
     def agg(self, **named: Column) -> Pipeline:
         """Explicit named aggregates (beyond-reference convenience)."""
         aggs = [col.alias(name) for name, col in named.items()]
         out = self.parent.df.groupBy(*[c(k) for k in self.keys]).agg(*aggs)
-        return self.parent._step(
-            out, f"group by {self.keys} -> agg", key_cols=self.keys, order=()
-        )
+        return self.parent._step(out, key_cols=self.keys, order=())

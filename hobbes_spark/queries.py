@@ -950,7 +950,7 @@ def kmeans_fixture_exact(spark, sf_dir):
          (10.0, 10.0), (10.0, 12.0), (12.0, 10.0), (12.0, 12.0)],
         "x double, y double",
     )
-    p = Pipeline.of(pts, "kmeans_fixture").kmeans_lloyd(2, "mean", iters=3)
+    p = Pipeline(pts).kmeans_lloyd(2, "mean", iters=3)
     return p.create_column("cluster", F.col("cluster").cast("int")).df
 
 
@@ -12087,6 +12087,7 @@ def stream_warc_ingest(spark, sf_dir):
     and a batch backfill agree record-for-record, the exactly-once
     landing-zone contract at 100 TB (the refusal rows 4/5 stay absent
     in BOTH regimes)."""
+    import shutil
     import tempfile
 
     from hobbes_spark.functions.warc import warc_records
@@ -12094,11 +12095,14 @@ def stream_warc_ingest(spark, sf_dir):
     from hobbes_spark.streaming.run import replay_to_df
 
     land = tempfile.mkdtemp(prefix="warc_land_")
-    _warc_fixture_df(spark).repartition(2, "media_id").write.mode(
-        "overwrite").parquet(land)
-    stream = stream_parquet(spark, land, max_files_per_trigger=1)
-    recs = warc_records(stream)
-    out = replay_to_df(recs, spark, mode="append")
+    try:
+        _warc_fixture_df(spark).repartition(2, "media_id").write.mode(
+            "overwrite").parquet(land)
+        stream = stream_parquet(spark, land, max_files_per_trigger=1)
+        out = replay_to_df(warc_records(stream), spark, mode="append")
+    finally:
+        # the memory sink already holds the rows
+        shutil.rmtree(land, ignore_errors=True)
     return out.select(
         "media_id", "record_index", "codec", "warc_type", "target_uri",
         "http_status",
@@ -12520,6 +12524,7 @@ def stream_cdx_index(spark, sf_dir):
     fixture shards land as separate parquet files consumed at
     maxFilesPerTrigger=1; the APPEND stream must replay to exactly the
     batch `cdx_index_build` truth rows."""
+    import shutil
     import tempfile
 
     from hobbes_spark.functions.warc import cdx_index
@@ -12527,10 +12532,14 @@ def stream_cdx_index(spark, sf_dir):
     from hobbes_spark.streaming.run import replay_to_df
 
     land = tempfile.mkdtemp(prefix="cdx_land_")
-    _cdx_fixture_df(spark).repartition(2, "media_id").write.mode(
-        "overwrite").parquet(land)
-    stream = stream_parquet(spark, land, max_files_per_trigger=1)
-    out = replay_to_df(cdx_index(stream), spark, mode="append")
+    try:
+        _cdx_fixture_df(spark).repartition(2, "media_id").write.mode(
+            "overwrite").parquet(land)
+        stream = stream_parquet(spark, land, max_files_per_trigger=1)
+        out = replay_to_df(cdx_index(stream), spark, mode="append")
+    finally:
+        # the memory sink already holds the rows
+        shutil.rmtree(land, ignore_errors=True)
     return out.orderBy("media_id", "record_index")
 
 
@@ -13433,6 +13442,7 @@ def stream_extract_ingest(spark, sf_dir):
     ``extract_any_stats`` truth rows (refusal rows 6/7 stay absent in
     BOTH regimes) — micro-batched intake and a batch backfill agree
     payload-for-payload."""
+    import shutil
     import tempfile
 
     from hobbes_spark.functions.extract import extract_text_any
@@ -13440,11 +13450,14 @@ def stream_extract_ingest(spark, sf_dir):
     from hobbes_spark.streaming.run import replay_to_df
 
     land = tempfile.mkdtemp(prefix="extract_land_")
-    _extract_any_fixture_df(spark).repartition(2, "media_id").write.mode(
-        "overwrite").parquet(land)
-    stream = stream_parquet(spark, land, max_files_per_trigger=1)
-    routed = extract_text_any(stream)
-    out = replay_to_df(routed, spark, mode="append")
+    try:
+        _extract_any_fixture_df(spark).repartition(2, "media_id").write.mode(
+            "overwrite").parquet(land)
+        stream = stream_parquet(spark, land, max_files_per_trigger=1)
+        out = replay_to_df(extract_text_any(stream), spark, mode="append")
+    finally:
+        # the memory sink already holds the rows
+        shutil.rmtree(land, ignore_errors=True)
     return out.select("media_id", "kind", "n_chars")
 
 

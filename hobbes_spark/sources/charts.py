@@ -60,6 +60,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from hobbes_spark.expressions import qname
+from hobbes_spark.sources.sinks import json_cell
 
 __all__ = [
     "CHART_TYPES",
@@ -86,16 +87,6 @@ _GAUGE_OPTIONS = {
 }
 
 
-def _cell(v):
-    if isinstance(v, (dt.datetime, dt.date)):
-        return v.isoformat()
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    return v
-
-
 def series_table(
     df: DataFrame, key_cols: Sequence[str] | str | None = None
 ) -> list[tuple[str, list[tuple]]]:
@@ -116,14 +107,14 @@ def series_table(
     rows = df.collect()
     if key_cols:
         keys = [
-            ".".join(str(_cell(r[k])) for k in key_cols) if len(key_cols) > 1
-            else _cell(r[key_cols[0]])
+            ".".join(str(json_cell(r[k])) for k in key_cols) if len(key_cols) > 1
+            else json_cell(r[key_cols[0]])
             for r in rows
         ]
     else:
         keys = list(range(len(rows)))
     return [
-        (c, [(k, _cell(r[c])) for k, r in zip(keys, rows)]) for c in value_cols
+        (c, [(k, json_cell(r[c])) for k, r in zip(keys, rows)]) for c in value_cols
     ]
 
 
@@ -200,7 +191,7 @@ def _to_float(v) -> float:
 
 def _to_date_string(v) -> str:
     # Chart.fs:125-133 — the date-coercion ladder (DateTime / ticks /
-    # parseable string); here keys already pass through _cell isoformat
+    # parseable string); here keys already pass through json_cell isoformat
     if isinstance(v, (dt.datetime, dt.date)):
         return v.isoformat()
     if isinstance(v, str):

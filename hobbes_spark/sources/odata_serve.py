@@ -42,6 +42,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hobbes_spark.sources.sinks import json_cell
+
 __all__ = ["parse_filter", "apply_odata_options", "odata_response"]
 
 
@@ -444,21 +446,6 @@ def apply_odata_options(df: DataFrame, options: Mapping[str, str]) -> DataFrame:
     return shaped
 
 
-def _json_cell(v):
-    import datetime
-    import decimal
-
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, bytearray):
-        return bytes(v).hex()
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
 def odata_response(
     df: DataFrame,
     options: Mapping[str, str] | None = None,
@@ -506,7 +493,7 @@ def odata_response(
         if page_size is not None and len(rows) >= page_size:
             truncated = True
             break
-        rows.append({c: _json_cell(v) for c, v in zip(cols, row)})
+        rows.append({c: json_cell(v) for c, v in zip(cols, row)})
     out["value"] = rows
 
     remaining_top = None

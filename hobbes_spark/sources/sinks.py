@@ -1,27 +1,28 @@
-"""Sinks: the uniform ``DataResult`` wire format and cached materialization.
+"""Sinks: the uniform ``DataResult`` wire format, its JSON cell encoder
+and parquet layouts.
 
 Reference wire format (`workers/localdata.worker/src/Data.fs:45-49`;
 sample at `tools/visualizer/cli/src/Program.fs:49`)::
 
     {"columnNames": [...], "values": [[...], ...], "rowCount": N}
 
-and the per-prefix result cache keyed ``md5(source):t1:t2…``
-(`tools/workbench/src/Types.fs:176-184`).
+The reference's per-prefix result cache keyed ``md5(source):t1:t2…``
+(`tools/workbench/src/Types.fs:176-184`) is sync's parquet cache
+(``sync._key_of`` / ``sync.read_cached``).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import json
-import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 __all__ = [
+    "json_cell",
     "to_data_result",
-    "to_json_rows",
-    "checkpoint",
     "write_partitioned",
     "write_bucketed",
     "zorder_value",
@@ -70,26 +71,28 @@ def stage_parquet_once(df, path: str, key=None):
     return df
 
 
-def _encode(v):
+def json_cell(v):
     """Typed JSON encode matching the reference's Format sink
     (`workers/calculator.worker/src/Processer.fs:40-66`): DateTime ISO,
     numbers raw, bool, null. Recursive — temporals/decimals/bytes also
     arrive NESTED in array and struct result columns, and a bare
-    pass-through would die in ``json.dumps`` at the export boundary."""
-    import decimal
-
+    pass-through would die in ``json.dumps`` at the export boundary.
+    The one cell encoder of every JSON export (DataResult, OData,
+    chart payloads)."""
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     if isinstance(v, decimal.Decimal):
         return float(v)
     if isinstance(v, (bytes, bytearray)):
         return bytes(v).hex()
+    # a Row (struct cell) is a tuple: test it before the list branch so
+    # a struct encodes as an object, not a positional list
+    if isinstance(v, Row):
+        return {k: json_cell(x) for k, x in v.asDict().items()}
     if isinstance(v, (list, tuple)):
-        return [_encode(x) for x in v]
-    if hasattr(v, "asDict"):  # pyspark Row (struct column)
-        return {k: _encode(x) for k, x in v.asDict().items()}
+        return [json_cell(x) for x in v]
     if isinstance(v, dict):
-        return {k: _encode(x) for k, x in v.items()}
+        return {k: json_cell(x) for k, x in v.items()}
     return v
 
 
@@ -99,31 +102,12 @@ def to_data_result(df: DataFrame) -> dict:
     exactly like the reference's Format sink; never in the transform path.
     """
     cols = df.columns
-    values = [[_encode(v) for v in row] for row in df.collect()]
+    values = [[json_cell(v) for v in row] for row in df.collect()]
     return {"columnNames": cols, "values": values, "rowCount": len(values)}
 
 
 def to_data_result_json(df: DataFrame) -> str:
     return json.dumps(to_data_result(df))
-
-
-def to_json_rows(df: DataFrame):
-    """Row-major JSON objects (``df.toJSON`` — distributed encode)."""
-    return df.toJSON()
-
-
-def checkpoint(pipeline, base_dir: str) -> "DataFrame":
-    """Per-prefix parquet checkpoint: write the pipeline's current result
-    under its cache key and return a re-read DataFrame, truncating lineage
-    — the Spark analog of the reference's uniform cache + ``dependsOn``
-    chains (`workers/calculator.worker/src/Program.fs:25-56`)."""
-    path = os.path.join(base_dir, pipeline.cache_key())
-    # gate on the writer's _SUCCESS marker so a crashed partial write is
-    # redone, never served. (Driver-local check: for object-store
-    # base_dirs use the Hadoop FS API instead.)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        pipeline.df.write.mode("overwrite").parquet(path)
-    return pipeline.df.sparkSession.read.parquet(path)
 
 
 def write_partitioned(

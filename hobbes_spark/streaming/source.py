@@ -12,6 +12,7 @@ per-microbatch work.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 
@@ -57,13 +58,30 @@ def stream_parquet(
     # FileStreamSource wants a directory (its basePath); a single-file
     # table is exposed through a symlink dir.
     if os.path.isfile(path):
-        d = tempfile.mkdtemp(prefix="hb_stream_")
-        os.symlink(os.path.abspath(path), os.path.join(d, os.path.basename(path)))
-        path = d
+        path = _symlink_dir(path)
     reader = spark.readStream.schema(static.schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
+
+
+def _symlink_dir(path: str) -> str:
+    """The directory holding one symlink to the file ``path``, named
+    after the file's absolute path, so every stream over one file
+    shares one directory instead of leaving a new one per call.
+    Concurrent callers may race to create it; a link that already
+    points at the file is theirs and is reused."""
+    target = os.path.abspath(path)
+    digest = hashlib.md5(target.encode()).hexdigest()
+    d = os.path.join(tempfile.gettempdir(), f"hb_stream_{digest}")
+    os.makedirs(d, exist_ok=True)
+    link = os.path.join(d, os.path.basename(target))
+    try:
+        os.symlink(target, link)
+    except FileExistsError:
+        if os.readlink(link) != target:
+            raise
+    return d
 
 
 def normalize_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:

@@ -25,9 +25,8 @@ in the report the sync worker printed at convergence
 
 Scale shape: the driver-side loop is O(#configurations) orchestration,
 never data; every node's result lands in parquet and is READ BACK for
-its dependents, truncating lineage exactly like
-:func:`hobbes_spark.sources.sinks.checkpoint` — a 50-node chain recomputes
-nothing and no plan grows unboundedly.  Independent DAG nodes are
+its dependents, truncating the plan at every node — a 50-node chain
+recomputes nothing and no plan grows unboundedly.  Independent DAG nodes are
 submitted concurrently from a small thread pool against the shared
 SparkSession (``max_parallelism``, each worker tagged with a
 ``spark.scheduler.pool`` local property so a FAIR-configured cluster
@@ -36,9 +35,10 @@ interleaves their stages) — the analog of the reference fanning one
 (`workers/syncronization.worker/src/Program.fs:50-63`); a 100-node
 configuration set no longer idles the cluster between single-node jobs.
 
-Cache keys follow the reference's scheme: a source/transform chain keys
-``md5(source):t1:t2`` (`tools/workbench/src/Types.fs:176-184`, already
-mirrored by ``Pipeline.cache_key``); a merge keys over its dataset
+This parquet cache is the engine's one result cache (``_key_of``,
+``read_cached``). Cache keys follow the reference's scheme: a
+source/transform chain keys ``md5(source):t1:t2``
+(`tools/workbench/src/Types.fs:176-184`); a merge keys over its dataset
 keys, a join over (left, right, field) — the ``CacheKey`` fields of
 ``MergeMessage`` / ``JoinMessage`` (`Broker.fs:81-93`). Program keys
 additionally fold in a fingerprint of the inline ``tables``
@@ -158,10 +158,9 @@ def _tables_fingerprint(tables: Mapping[str, DataFrame] | None) -> str:
 
 def _key_of(cfg: Configuration, child_keys: Mapping[str, str]) -> str:
     if cfg.program is not None:
-        # the chain scheme md5(source):t1:t2 is Pipeline.cache_key's
-        # job; at the orchestration layer the chain is the program TEXT
-        # plus the identity of its external inputs (ADVICE r5: text
-        # alone collided for identical programs over different tables)
+        # the chain md5(source):t1:t2 is keyed by the program TEXT plus
+        # the identity of its external inputs (ADVICE r5: text alone
+        # collided for identical programs over different tables)
         blob = cfg.program
         extra = _tables_fingerprint(cfg.tables)
         if cfg.version is not None:
@@ -208,17 +207,14 @@ def _compute(
 
         left, right, fld = cfg.join
         return join(
-            Pipeline.of(read_cached(spark, cache_dir, child_keys[left]), left),
-            Pipeline.of(read_cached(spark, cache_dir, child_keys[right]), right),
+            Pipeline(read_cached(spark, cache_dir, child_keys[left])),
+            Pipeline(read_cached(spark, cache_dir, child_keys[right])),
             fld,
         ).df
     from hobbes_spark.operators.combinators import merge
 
     return merge(
-        *[
-            Pipeline.of(read_cached(spark, cache_dir, child_keys[d]), d)
-            for d in cfg.merge
-        ]
+        *[Pipeline(read_cached(spark, cache_dir, child_keys[d])) for d in cfg.merge]
     ).df
 
 

@@ -3,7 +3,17 @@ programs (`/root/reference/tests/transformations/*.hb`) parse, compile and
 run against fixtures shaped like the OData feeds they were written for.
 
 This is the reference's `.hb` corpus test strategy (SURVEY §5) applied to
-the new engine.
+the new engine. The tests that open the reference programs skip when that
+checkout is absent. The same statement forms keep repo-owned end-to-end
+coverage either way:
+
+* the ``hb_*`` catalog queries (``hb_order_frequency``, ``hb_mttr``,
+  ``hb_cycle_time``, ``hb_commit_frequency``, ``hb_gandalf_state``,
+  ``hb_logic_state``, ``hb_velocity_pivot``, ``hb_bucket_trend``,
+  ``hb_localdata_top``) run ``.hb`` text, and
+  ``test_oracle_parity.py::test_query_matches_oracle`` checks each one
+  against DuckDB;
+* ``test_hb_fuzz.py`` covers ``expanding`` and markdown blocks.
 """
 
 from __future__ import annotations
@@ -22,12 +32,16 @@ from hobbes_spark.pipeline import Pipeline
 
 HB_DIR = "/root/reference/tests/transformations"
 HB_FILES = sorted(glob.glob(os.path.join(HB_DIR, "*.hb")))
+needs_reference = pytest.mark.skipif(
+    not os.path.exists(HB_DIR), reason="reference fixture absent"
+)
 
 
 # --------------------------------------------------------------------- #
 # parser units
 # --------------------------------------------------------------------- #
 
+@needs_reference
 def test_corpus_parses():
     assert len(HB_FILES) == 7
     for path in HB_FILES:
@@ -36,6 +50,7 @@ def test_corpus_parses():
         assert prog.properties.get("provider") in ("odata", "rest"), path
 
 
+@needs_reference
 def test_header_and_comments():
     prog = parse_program(open(os.path.join(HB_DIR, "Velocity.hb")).read())
     assert prog.properties["provider"] == "odata"
@@ -142,6 +157,7 @@ def _run(path, source):
 # the corpus, end to end
 # --------------------------------------------------------------------- #
 
+@needs_reference
 def test_flowerpot(spark):
     out = _run(os.path.join(HB_DIR, "flowerpot.hb"), _revisions(spark, "iteration"))
     rows = out.collect()
@@ -159,6 +175,7 @@ def test_flowerpot(spark):
     assert all(1 <= r["Sprint Number"] <= 8 for r in rows)
 
 
+@needs_reference
 @pytest.mark.parametrize("name", ["gandalf.hb", "logic.hb"])
 def test_gandalf_logic(spark, name):
     out = _run(os.path.join(HB_DIR, name), _revisions(spark, "iteration"))
@@ -166,6 +183,7 @@ def test_gandalf_logic(spark, name):
     assert rows and "Sprint Number" in out.columns
 
 
+@needs_reference
 def test_velocity(spark):
     out = _run(os.path.join(HB_DIR, "Velocity.hb"), _revisions(spark, "iteration"))
     rows = out.collect()
@@ -174,6 +192,7 @@ def test_velocity(spark):
     assert any(r["Velocity 3"] is not None for r in rows)
 
 
+@needs_reference
 def test_mttr(spark):
     out = _run(os.path.join(HB_DIR, "MTTR.hb"), _revisions(spark, "sprint"))
     rows = out.collect()
@@ -186,6 +205,7 @@ def test_mttr(spark):
     assert all(r["Mean time to recover 11"] is not None for r in rows)
 
 
+@needs_reference
 def test_logic_cycle_time(spark):
     out = _run(os.path.join(HB_DIR, "LogicCycleTime.hb"), _revisions(spark, "sprint"))
     rows = out.collect()
@@ -195,6 +215,7 @@ def test_logic_cycle_time(spark):
     assert "Sprint Name" not in out.columns
 
 
+@needs_reference
 def test_commit_frequency(spark):
     out = _run(os.path.join(HB_DIR, "Logic Commit Frequency.hb"), _commits(spark))
     rows = out.collect()
@@ -212,7 +233,7 @@ def test_keys_and_index(spark):
     df = spark.createDataFrame(
         [Row(a="x", b=1, v=2.0), Row(a="x", b=2, v=3.0), Row(a="y", b=1, v=4.0)]
     )
-    pl = Pipeline.of(df).group_by("a", "b").reduce("sum")
+    pl = Pipeline(df).group_by("a", "b").reduce("sum")
     out = pl.create_column("k", pl.keys_col()).df
     got = {r["k"] for r in out.collect()}
     assert got == {"x-1", "x-2", "y-1"}
@@ -270,7 +291,7 @@ def test_pivot_by_expression(spark):
     df = spark.createDataFrame(rows, "id long, ChangedDate timestamp, State string")
     out = run_hb(
         "pivot [(format date ChangedDate month)] [State] -> count [State]",
-        Pipeline.of(df),
+        Pipeline(df),
     )
     got = {r["key"]: (r["Done"], r["Todo"]) for r in out.collect()}
     assert set(got) == {1, 2, 3}
@@ -323,7 +344,7 @@ def test_unspaced_subtraction_computes(spark):
     from hobbes_spark.pipeline import Pipeline
 
     df = spark.createDataFrame([(10,), (20,)], "v int")
-    out = run_hb("create column prev (v-1)", Pipeline.of(df))
+    out = run_hb("create column prev (v-1)", Pipeline(df))
     assert sorted(r["prev"] for r in out.df.collect()) == [9, 19]
 
 
@@ -337,13 +358,13 @@ def test_empty_string_compare_is_literal_on_string_columns(spark):
     df = spark.createDataFrame(
         [("a", 1.0), ("", 2.0), (None, 3.0)], "x string, v double"
     )
-    out = run_hb("only !(x = '')", Pipeline.of(df))
+    out = run_hb("only !(x = '')", Pipeline(df))
     assert sorted(r["v"] for r in out.df.collect()) == [1.0]  # '' AND NULL out
-    kept = run_hb("only (x = '')", Pipeline.of(df))
+    kept = run_hb("only (x = '')", Pipeline(df))
     assert [r["v"] for r in kept.df.collect()] == [2.0]  # the real '' row
     # non-string column: '' still means missing
     dn = spark.createDataFrame([(1.5, "p"), (None, "q")], "y double, tag string")
-    outn = run_hb("only !(y = '')", Pipeline.of(dn))
+    outn = run_hb("only !(y = '')", Pipeline(dn))
     assert [r["tag"] for r in outn.df.collect()] == ["p"]
 
 
@@ -360,7 +381,7 @@ def test_pivot_count_counts_rows_in_null_keyed_groups(spark):
         [(None, "Done"), (None, "Done"), (1, "Done"), (1, "Todo")],
         "Sprint int, State string",
     )
-    out = run_hb("pivot [Sprint] [State] -> count [State]\n", Pipeline.of(df))
+    out = run_hb("pivot [Sprint] [State] -> count [State]\n", Pipeline(df))
     rows = {r["Sprint"]: (r["Done"], r["Todo"]) for r in out.df.collect()}
     assert rows[None] == (2, 0)  # NULL-keyed group counts its real rows
     assert rows[1] == (1, 1)
@@ -397,7 +418,7 @@ def test_subtraction_after_if_brace(spark):
 
     df = spark.createDataFrame([(1,), (2,)], "a int")
     out = run_hb(
-        'create column "x" (if [a = 1] {10} else {20}-1)\n', Pipeline.of(df)
+        'create column "x" (if [a = 1] {10} else {20}-1)\n', Pipeline(df)
     )
     # `-1` applies to the whole if-expression: a=1 -> 10-1, a=2 -> 20-1
     assert sorted(r["x"] for r in out.df.collect()) == [9, 19]
@@ -418,7 +439,7 @@ def test_moving_partitioned_dot_path_key(spark):
         [("g1", 1, 1.0), ("g1", 2, 3.0), ("g2", 1, 10.0)],
         ["Iteration.Name", "i", "v"],
     )
-    p = Pipeline.of(df).sort_by("i")
+    p = Pipeline(df).sort_by("i")
     out = p.moving("m", "mean", 2, "v", partition_by=["Iteration.Name"]).df
     got = {(r["Iteration.Name"], r["i"]): r["m"] for r in out.collect()}
     assert got[("g1", 2)] == 2.0 and got[("g2", 1)] is None

@@ -471,12 +471,12 @@ def test_hb_program_equals_direct_api(spark, fixture_df, prog):
     text, fns = prog
 
     def direct():
-        pl = Pipeline.of(fixture_df, "fuzz")
+        pl = Pipeline(fixture_df)
         for fn in fns:
             pl = fn(pl)
         return pl
 
-    a = _outcome(lambda: run_hb(text, Pipeline.of(fixture_df, "fuzz")))
+    a = _outcome(lambda: run_hb(text, Pipeline(fixture_df)))
     b = _outcome(direct)
     assert a[0] == b[0], (text, a, b)
     if a[0] == "ok":
@@ -567,10 +567,7 @@ def sourced_programs(draw):
         def source(spark, tables, cols=tuple(cols), pyrows=tuple(map(tuple, pyrows))):
             from hobbes_spark.sources.ingest import local_data
 
-            return Pipeline.of(
-                local_data(spark, list(cols), [list(r) for r in pyrows]),
-                "direct-localdata",
-            )
+            return Pipeline(local_data(spark, list(cols), [list(r) for r in pyrows]))
 
     elif kind == "merge":
         ids = draw(
@@ -585,9 +582,7 @@ def sourced_programs(draw):
         def source(spark, tables, ids=tuple(ids)):
             from hobbes_spark.operators import combinators
 
-            return combinators.merge(
-                *[Pipeline.of(tables[d], f"dataset:{d}") for d in ids]
-            )
+            return combinators.merge(*[Pipeline(tables[d]) for d in ids])
 
     else:
         left, right = draw(st.sampled_from(_JOIN_PAIRS))
@@ -598,11 +593,7 @@ def sourced_programs(draw):
         def source(spark, tables, left=left, right=right):
             from hobbes_spark.operators import combinators
 
-            return combinators.join(
-                Pipeline.of(tables[left], f"dataset:{left}"),
-                Pipeline.of(tables[right], f"dataset:{right}"),
-                "k",
-            )
+            return combinators.join(Pipeline(tables[left]), Pipeline(tables[right]), "k")
 
     # body statements valid for the resolved schema, with markdown
     # chunks interleaved anywhere between them

@@ -10,7 +10,7 @@ from hobbes_spark import Pipeline
 def series(spark):
     rows = [(i, float(i) * 2.0 + 1.0, f"s{i}") for i in range(20)]
     df = spark.createDataFrame(rows, "i int, y double, s string")
-    return Pipeline.of(df).sort_by("i")
+    return Pipeline(df).sort_by("i")
 
 
 def test_buckets_remainder_to_last(series):
@@ -30,7 +30,7 @@ def test_buckets_mean(series):
 
 def test_each_rowwise(spark):
     df = spark.createDataFrame([(1.0, 5.0, 3.0, "x")], "a double, b double, c double, s string")
-    p = Pipeline.of(df)
+    p = Pipeline(df)
     assert p.each("sum").df.first()["value"] == 9.0
     assert p.each("max").df.first()["value"] == 5.0
     assert p.each("mean").df.first()["value"] == 3.0
@@ -41,7 +41,7 @@ def test_each_rowwise(spark):
 
 def test_each_skips_nulls(spark):
     df = spark.createDataFrame([(1.0, None, 3.0)], "a double, b double, c double")
-    assert Pipeline.of(df).each("mean").df.first()["value"] == 2.0
+    assert Pipeline(df).each("mean").df.first()["value"] == 2.0
 
 
 def test_linear_regression(series):
@@ -83,7 +83,7 @@ def test_linear_extrapolation_zero_and_negative_pred(series):
 def test_kmeans_two_blobs(spark):
     pts = [(float(i % 7) / 100 + (0.0 if i < 30 else 100.0),) for i in range(60)]
     df = spark.createDataFrame(pts, "x double")
-    out = Pipeline.of(df).kmeans(2, "mean", seed=7)
+    out = Pipeline(df).kmeans(2, "mean", seed=7)
     rows = out.df.orderBy("cluster").collect()
     assert len(rows) == 2
     assert rows[0]["x"] == pytest.approx(0.03, abs=0.01)
@@ -144,7 +144,7 @@ def test_each_count_zero_on_all_null_row(spark):
     df = spark.createDataFrame(
         [("a", None, None), ("b", 1.0, 2.0)], "k string, x double, y double"
     )
-    p = Pipeline.of(df).index_by("k")
+    p = Pipeline(df).index_by("k")
     rows = {r["k"]: r["value"] for r in p.each("count").df.collect()}
     assert rows == {"a": 0, "b": 2}  # 0, not NULL
 
@@ -153,12 +153,12 @@ def test_kmeans_lloyd_empty_and_nan_guards(spark):
     from hobbes_spark.operators.ml import kmeans_lloyd
     from hobbes_spark.pipeline import Pipeline
 
-    empty = Pipeline.of(
+    empty = Pipeline(
         spark.createDataFrame([(None,)], "x double")
     )
     with pytest.raises(ValueError, match="no complete rows"):
         kmeans_lloyd(empty, 2, "mean")
-    nan = Pipeline.of(
+    nan = Pipeline(
         spark.createDataFrame([(float("nan"),), (1.0,), (2.0,)], "x double")
     )
     out = kmeans_lloyd(nan, 2, "mean").df.collect()  # NaN row filtered, no crash

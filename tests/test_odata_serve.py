@@ -265,6 +265,23 @@ def test_top_page_equals_unbounded_slice(orders):
         assert page == everything[skip:skip + top]
 
 
+def test_nested_cells_serve_as_json(spark):
+    """Array and struct cells encode recursively: a nested date is an ISO
+    string, a struct is an object, and the envelope survives json.dumps."""
+    import json
+
+    df = spark.createDataFrame(
+        [(1, [datetime.date(2021, 3, 4), None], (datetime.date(2021, 3, 5), 5))],
+        "k int, ds array<date>, s struct<d:date,n:int>",
+    )
+    resp = json.loads(
+        json.dumps(odata_response(df, {"$select": "k,ds,s", "$top": "5"}))
+    )
+    assert resp["value"] == [
+        {"k": 1, "ds": ["2021-03-04", None], "s": {"d": "2021-03-05", "n": 5}}
+    ]
+
+
 # --------------------------------------------------------------------- #
 # Review-hardening regressions
 # --------------------------------------------------------------------- #

@@ -74,7 +74,7 @@ def test_group_reduce_matches_duckdb(spark, red, rows):
     sdf, con = _frames(spark, rows)
     got = {
         r["k"]: (r["a"], r["b"])
-        for r in Pipeline.of(sdf).group_by("k").reduce(red).collect()
+        for r in Pipeline(sdf).group_by("k").reduce(red).collect()
     }
     agg_a = SQL_RED[red].format(c="a")
     agg_b = SQL_RED[red].format(c="b")
@@ -98,7 +98,7 @@ def test_filter_null_semantics(spark, rows, lo):
     from pyspark.sql import functions as F
 
     sdf, con = _frames(spark, rows)
-    got = Pipeline.of(sdf).only(F.col("a") > lo).df.count()
+    got = Pipeline(sdf).only(F.col("a") > lo).df.count()
     want = con.execute(f"SELECT COUNT(*) FROM t WHERE a > {lo}").fetchone()[0]
     assert got == want
 
@@ -108,7 +108,7 @@ def test_filter_null_semantics(spark, rows, lo):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_dense_rows_matches(spark, rows):
     sdf, con = _frames(spark, rows)
-    got = Pipeline.of(sdf).dense_rows().df.count()
+    got = Pipeline(sdf).dense_rows().df.count()
     want = con.execute(
         "SELECT COUNT(*) FROM t WHERE k IS NOT NULL AND a IS NOT NULL AND b IS NOT NULL"
     ).fetchone()[0]
@@ -131,7 +131,7 @@ def test_moving_mean_matches(spark, rows, n):
     )
     got = [
         r["m"]
-        for r in Pipeline.of(sdf)
+        for r in Pipeline(sdf)
         .sort_by("rid")
         .moving("m", "mean", n, "b")
         .df.orderBy("rid")
@@ -157,7 +157,7 @@ def test_moving_mean_matches(spark, rows, n):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_pivot_count_matches(spark, rows):
     sdf, con = _frames(spark, rows)
-    out = Pipeline.of(sdf).create_column("one", 1).pivot(["k"], "k", "count", "one").df
+    out = Pipeline(sdf).create_column("one", 1).pivot(["k"], "k", "count", "one").df
     got = {r["k"]: sum(v for c, v in r.asDict().items() if c != "k" and v is not None)
            for r in out.collect()}
     want = dict(con.execute("SELECT k, COUNT(*) FROM t GROUP BY k").fetchall())

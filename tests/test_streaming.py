@@ -913,6 +913,25 @@ def test_stream_parquet_generic_source(spark, sf_dir):
     assert got == want and len(got) >= 2
 
 
+def test_stream_parquet_single_file_reuses_one_symlink_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A single-file stream is exposed through a symlink directory named
+    after the file: repeated calls reuse it instead of leaving one
+    directory per call, and the stream still reads the file."""
+    from hobbes_spark.streaming import stream_parquet
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    path = f"{sf_dir}/documents.parquet"
+    first = stream_parquet(spark, path)
+    second = stream_parquet(spark, path)
+    dirs = [e for e in os.listdir(tmp_path) if e.startswith("hb_stream_")]
+    assert len(dirs) == 1
+    link = os.path.join(tmp_path, dirs[0], "documents.parquet")
+    assert os.readlink(link) == os.path.abspath(path)
+    assert first.schema == second.schema == spark.read.parquet(path).schema
+
+
 # --------------------------------------------------------------------- #
 # Restart-replay (exactly-once) gates, r8 verdict item 4: kill a file-
 # sink query between "batch written" and "offset committed" (simulated

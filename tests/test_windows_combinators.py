@@ -62,9 +62,9 @@ def test_moving_partitioned(spark, sf_dir):
 
 def test_merge_preserves_rowcount_and_empty_sides(spark):
     # calculator.worker/tests/Processer.fs:62-72 semantics
-    a = Pipeline.of(spark.createDataFrame([(1, "x")], "i int, s string"))
-    b = Pipeline.of(spark.createDataFrame([(2.5, True)], "d double, b boolean"))
-    empty = Pipeline.of(spark.createDataFrame([], "i int, s string"))
+    a = Pipeline(spark.createDataFrame([(1, "x")], "i int, s string"))
+    b = Pipeline(spark.createDataFrame([(2.5, True)], "d double, b boolean"))
+    empty = Pipeline(spark.createDataFrame([], "i int, s string"))
     out = Pipeline.merge(a, b, empty)
     assert out.df.count() == 2
     assert set(out.columns) == {"i", "s", "d", "b"}

@@ -271,12 +271,7 @@ def main():
 
     def chaotic_from_parquet(cls, spark_, path):
         p = orig_from_parquet(cls, spark_, path)
-        return cls(
-            wrap(p.df),
-            key_cols=p.key_cols,
-            order=p.order,
-            lineage=p.lineage,
-        )
+        return cls(wrap(p.df), key_cols=p.key_cols, order=p.order)
 
     # Negative control: PROVE the harness detects order-sensitivity.
     # ``F.first`` with no ordering is exactly the bug class this gate
