@@ -51,7 +51,10 @@ def resolve_source(
     )
 
     if provider == "parquet":
-        return Pipeline.from_parquet(spark, _get(properties, "url"))
+        url = _get(properties, "url")
+        if not url:
+            raise ValueError("provider: parquet needs a url")
+        return Pipeline.from_parquet(spark, url)
 
     if provider == "localdata":
         if tables and name in (tables or {}):

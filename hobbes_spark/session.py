@@ -20,11 +20,12 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     Defaults honour the driver environment: ``SPARK_GRAFT_CPUS`` sets local
-    parallelism, shuffle partitions default to the same so a local run does
-    not create thousands of tiny tasks.  On a real cluster these would be
-    set by the deployment (and AQE coalesces shuffle partitions anyway).
+    parallelism (default: the host's core count), shuffle partitions
+    default to the same so a local run does not create thousands of tiny
+    tasks.  On a real cluster these would be set by the deployment (and
+    AQE coalesces shuffle partitions anyway).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))

@@ -20,6 +20,8 @@ import json
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
+from hobbes_spark.pipeline import _listing_signature
+
 __all__ = [
     "json_cell",
     "to_data_result",
@@ -64,10 +66,13 @@ def stage_parquet_once(df, path: str, key=None):
     The skip tracks the LAST key staged at each path (not a seen-set):
     if calls alternate keys (sf0.001 then sf0.01 then sf0.001 in one
     process), every key change re-stages, so the dump always holds the
-    bytes of the most recent call the oracle will replay."""
-    if _STAGED.get(path) != (key,):
+    bytes of the most recent call the oracle will replay. It also
+    tracks the dump's ``os.stat`` listing signature after the write
+    (the schema cache's rule, ``pipeline._listing_signature``): a dump
+    another process overwrote or deleted is staged again."""
+    if _STAGED.get(path) != (key, _listing_signature(path)):
         df.write.mode("overwrite").parquet(path)
-        _STAGED[path] = (key,)
+        _STAGED[path] = (key, _listing_signature(path))
     return df
 
 

@@ -25,13 +25,11 @@ from hobbes_spark.streaming.ingest import (
 from hobbes_spark.streaming.sinks import (
     idempotent_parquet_writer,
     start_idempotent_sink,
-    write_partitioned,
 )
 
 __all__ = [
     "idempotent_parquet_writer",
     "start_idempotent_sink",
-    "write_partitioned",
     "stream_events",
     "stream_parquet",
     "tumbling_agg",

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "idempotent_parquet_writer",
-    "write_partitioned",
     "start_idempotent_sink",
     "quality_gated_writer",
 ]
@@ -76,29 +75,6 @@ def start_idempotent_sink(
     if available_now:
         builder = builder.trigger(availableNow=True)
     return builder.start()
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Batch write with a production-shaped layout: directory-partitioned
-    on the pruning columns and capped file sizes.
-
-    ``maxRecordsPerFile`` bounds the biggest file a skewed partition can
-    produce (object stores and scan parallelism both hate multi-GB
-    files); downstream readers get partition pruning on
-    ``partition_cols`` for free from the directory layout.
-    """
-    (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
 
 
 def quality_gated_writer(

@@ -40,14 +40,17 @@ This parquet cache is the engine's one result cache (``_key_of``,
 source/transform chain keys ``md5(source):t1:t2``
 (`tools/workbench/src/Types.fs:176-184`); a merge keys over its dataset
 keys, a join over (left, right, field) — the ``CacheKey`` fields of
-``MergeMessage`` / ``JoinMessage`` (`Broker.fs:81-93`). Program keys
-additionally fold in a fingerprint of the inline ``tables``
-(plan-content ``semanticHash`` + schema) and the caller-supplied
-``version``, so two syncs with identical program text but different
-inline data never collide. A program with a live ``fetcher`` and no
-``version`` is refreshed on every sync — the reference's ``Sync``
-message re-triggers collectors rather than trusting a stale uniform
-cache — and ``force=True`` bypasses every cache hit wholesale.
+``MergeMessage`` / ``JoinMessage`` (`Broker.fs:81-93`). A program key
+is a pure function of the configuration, equal in every process. A
+program whose text names all it reads (``localdata`` rows, or a
+``parquet`` url ``os.stat`` can see) keys its text plus the url's
+listing signature — the schema cache's rule — so a rewritten source
+gets a new key. Any other program is external (``tables=``, a
+``fetcher``, ``git``, text that does not parse): its key folds in the
+configuration name and it is recomputed on every sync — the
+reference's ``Sync`` re-triggers collectors rather than trusting a
+stale uniform cache — unless the caller stamps a ``version``, which
+joins every program key. ``force=True`` bypasses every cache hit.
 """
 
 from __future__ import annotations
@@ -85,14 +88,11 @@ class Configuration:
     # inline tables / fetcher for the program's provider header
     tables: Mapping[str, DataFrame] | None = None
     fetcher: Callable[[str], str] | None = None
-    # caller-supplied data epoch for external inputs (e.g. a collector
-    # watermark). With a fetcher and NO version, the node is LIVE: the
-    # cache entry is refreshed on every sync, matching the reference's
-    # Sync message re-triggering collectors (Program.fs:50-63).
+    # caller-supplied data epoch (e.g. a collector watermark). It joins
+    # the cache key; an external program (see _described_input) without
+    # one is recomputed on every sync, matching the reference's Sync
+    # message re-triggering collectors (Program.fs:50-63).
     version: str | None = None
-
-    def is_live(self) -> bool:
-        return self.fetcher is not None and self.version is None
 
     def depends_on(self) -> tuple[str, ...]:
         if self.join is not None:
@@ -130,50 +130,52 @@ class SyncReport:
         return all(s in ("done", "cached") for s in self.statuses.values())
 
 
-def _tables_fingerprint(tables: Mapping[str, DataFrame] | None) -> str:
-    """Content-identity of the inline tables. A LOCAL frame (inline
-    rows — the ``localdata`` provider case) fingerprints its actual
-    collected content, so two different inline datasets can never share
-    a cache key (a 32-bit ``semanticHash`` alone could collide).
-    Non-local frames fall back to the plan's ``semanticHash`` + schema
-    — zero-job, identifies the source by its scan; callers with
-    mutable external storage should stamp ``version`` (and the hash is
-    not guaranteed stable across Spark upgrades — ``force=True``
-    refreshes a cache whose keys have rotated)."""
-    if not tables:
+def _described_input(cfg: Configuration) -> str | None:
+    """Identity of what a program reads when its text names all of it:
+    ``""`` for inline ``localdata`` rows, the url's listing signature
+    for ``provider: parquet``. ``None`` marks an external program, also
+    one that does not parse (it then fails in ``_compute``, not here)."""
+    if cfg.tables or cfg.fetcher is not None:
+        return None
+    from hobbes_spark.hb.parser import parse_program
+    from hobbes_spark.pipeline import _listing_signature
+
+    try:
+        props = parse_program(cfg.program).properties
+    except Exception:  # noqa: BLE001 — any parse error makes it external
+        return None
+    provider, url = str(props.get("provider") or "").strip().lower(), props.get("url")
+    if provider == "localdata" and props.get("columns") and props.get("rows") is not None:
         return ""
-    parts = []
-    for name in sorted(tables):
-        df = tables[name]
-        schema = df.schema.simpleString()
-        if df.isLocal():  # inline rows: bounded by construction
-            content = hashlib.md5(
-                repr([tuple(r) for r in df.collect()]).encode()
-            ).hexdigest()
-            parts.append(f"{name}=rows:{content}:{schema}")
-        else:
-            parts.append(f"{name}=plan:{df.semanticHash()}:{schema}")
-    return "\x1f".join(parts)
+    if provider == "parquet" and isinstance(url, str):
+        sig = _listing_signature(url.strip())
+        if sig is not None:
+            return "parquet=" + repr(sig)
+    return None
 
 
-def _key_of(cfg: Configuration, child_keys: Mapping[str, str]) -> str:
+def _key_of(cfg: Configuration, child_keys: Mapping[str, str]) -> tuple[str, bool]:
+    """``(cache key, live)``; a live node is recomputed on a key hit
+    too. A pure function of the configuration: it never raises and
+    reads no Spark state."""
     if cfg.program is not None:
-        # the chain md5(source):t1:t2 is keyed by the program TEXT plus
-        # the identity of its external inputs (ADVICE r5: text alone
-        # collided for identical programs over different tables)
-        blob = cfg.program
-        extra = _tables_fingerprint(cfg.tables)
+        # the chain md5(source):t1:t2 keyed by the program TEXT plus the
+        # identity of its input; an external input has none, so the
+        # name keeps same-text configurations apart
+        extra = _described_input(cfg)
+        live = extra is None and cfg.version is None
+        if extra is None:
+            extra = "name=" + cfg.name
         if cfg.version is not None:
             extra += "\x1fversion=" + cfg.version
-        if extra:
-            blob += "\x1f" + extra
-        return hashlib.md5(blob.encode()).hexdigest()
+        blob = cfg.program + ("\x1f" + extra if extra else "")
+        return hashlib.md5(blob.encode()).hexdigest(), live
     if cfg.join is not None:
         left, right, fld = cfg.join
         blob = "join\x1f" + child_keys[left] + "\x1f" + child_keys[right] + "\x1f" + fld
-        return hashlib.md5(blob.encode()).hexdigest()
-    blob = "merge\x1f" + "\x1f".join(child_keys[d] for d in cfg.merge)
-    return hashlib.md5(blob.encode()).hexdigest()
+    else:
+        blob = "merge\x1f" + "\x1f".join(child_keys[d] for d in cfg.merge)
+    return hashlib.md5(blob.encode()).hexdigest(), False
 
 
 def read_cached(spark: SparkSession, cache_dir: str, key: str) -> DataFrame:
@@ -232,7 +234,7 @@ def sync_configurations(
     fan-out, `Program.fs:50-63`).
 
     Per node: cache hit → ``cached`` (nothing recomputed; bypassed by
-    ``force=True``, a live fetcher without ``version``, or any
+    ``force=True``, an external program without ``version``, or any
     dependency recomputed THIS sync — refreshed inputs invalidate the
     chain even though live nodes keep their key); else compute
     + write parquet with up to ``max_retries`` attempts (the broker's
@@ -278,7 +280,7 @@ def sync_configurations(
                 report.statuses[name] = "blocked"
                 return
             child_keys = dict(report.cache_keys)
-        key = _key_of(cfg, child_keys)
+        key, live = _key_of(cfg, child_keys)
         with lock:
             report.cache_keys[name] = key
             key_lock = key_locks.setdefault(key, threading.Lock())
@@ -301,7 +303,7 @@ def sync_configurations(
                 dep_refreshed = any(
                     report.statuses.get(d) == "done" for d in deps
                 )
-            fresh = force or cfg.is_live() or dep_refreshed
+            fresh = force or live or dep_refreshed
             if not fresh and os.path.exists(os.path.join(path, "_SUCCESS")):
                 with lock:
                     report.statuses[name] = "cached"

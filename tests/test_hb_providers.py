@@ -146,6 +146,11 @@ def test_provider_errors():
         )
 
 
+def test_parquet_provider_needs_url(spark):
+    with pytest.raises(ValueError, match="provider: parquet needs a url"):
+        run_hb_program(spark, "provider: parquet\n\nonly true\n")
+
+
 def test_localdata_inline_rows(spark):
     text = (
         "provider: localdata\n"

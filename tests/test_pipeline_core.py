@@ -539,8 +539,9 @@ def _write(spark, path, cols):
 
 def test_schema_cache_warm_read_equals_first_read(spark, sf_dir, tmp_path, spark_jobs):
     """The warm read hands Spark the remembered schema and launches no
-    job, yet yields the same schema and the same plan identity
-    (``semanticHash`` keys sync's non-local inline tables)."""
+    job, yet yields the same schema and the same plan (equal
+    ``semanticHash``) as the cold read, so the remembered schema changes
+    nothing downstream of the scan."""
     path = str(tmp_path / "t")
     _write(spark, path, ["a", "b"])
     first, cold_jobs, _ = spark_jobs(lambda: read_parquet_any_ts(spark, path))
@@ -637,6 +638,25 @@ def test_profile_columns_dot_path_names(spark):
     df = spark.createDataFrame([(1, "x"), (2, None)], ["id", "a.b"])
     rows = {r["col_name"]: r["n_nulls"] for r in profile_columns(df).collect()}
     assert rows["a.b"] == 1
+
+
+def test_stage_parquet_once_restages_a_foreign_dump(spark, tmp_path):
+    """The dump is skipped only while its ``os.stat`` listing is the one
+    this process wrote: overwritten or deleted from outside, it is
+    staged again, so the oracle never replays foreign bytes."""
+    import shutil
+
+    from hobbes_spark.sources.sinks import stage_parquet_once
+
+    path = str(tmp_path / "dump")
+    df = spark.createDataFrame([(1,), (2,)], "a int")
+    stage_parquet_once(df, path, key="k")
+    spark.createDataFrame([(9,)], "a int").write.mode("overwrite").parquet(path)
+    stage_parquet_once(df, path, key="k")
+    assert sorted(r["a"] for r in spark.read.parquet(path).collect()) == [1, 2]
+    shutil.rmtree(path)
+    stage_parquet_once(df, path, key="k")
+    assert sorted(r["a"] for r in spark.read.parquet(path).collect()) == [1, 2]
 
 
 def test_data_result_encodes_nested_and_decimal(spark):

@@ -412,7 +412,7 @@ def test_idempotent_sink_replay_does_not_duplicate(spark, sf_dir, tmp_path):
 def test_write_partitioned_layout_and_pruning(spark, sf_dir, tmp_path):
     """Directory partitioning must show up on disk and as partition
     filters (pruned scan), with file sizes capped."""
-    from hobbes_spark.streaming.sinks import write_partitioned
+    from hobbes_spark.sources.sinks import write_partitioned
 
     out = str(tmp_path / "part")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -196,21 +196,165 @@ def test_cache_key_folds_in_inline_tables(spark, tmp_path):
     prog = "provider: localdata\nname: ext\n\n\nonly true\n"
     t1 = spark.createDataFrame([("a", 1)], "k string, v int")
     t2 = spark.createDataFrame([("b", 99)], "k string, v int")
-    first = sync_configurations(
+    sync_configurations(
         spark, [Configuration("cfg", program=prog, tables={"ext": t1})], cache
     )
     second = sync_configurations(
         spark, [Configuration("cfg", program=prog, tables={"ext": t2})], cache
     )
-    assert first.cache_keys["cfg"] != second.cache_keys["cfg"]
     assert second.statuses["cfg"] == "done"  # recomputed, not a stale hit
     assert {r["k"] for r in read_cached(spark, cache, second.cache_keys["cfg"]).collect()} == {"b"}
-    # same tables again -> same key, cache hit
-    third = sync_configurations(
-        spark, [Configuration("cfg", program=prog, tables={"ext": t2})], cache
+    # two same-text configurations in ONE sync: the name keeps them apart
+    both = sync_configurations(
+        spark,
+        [
+            Configuration("one", program=prog, tables={"ext": t1}),
+            Configuration("two", program=prog, tables={"ext": t2}),
+        ],
+        cache,
     )
-    assert third.cache_keys["cfg"] == second.cache_keys["cfg"]
-    assert third.statuses["cfg"] == "cached"
+    assert both.statuses == {"one": "done", "two": "done"}
+    assert both.cache_keys["one"] != both.cache_keys["two"]
+    got = {
+        n: {r["k"] for r in read_cached(spark, cache, k).collect()}
+        for n, k in both.cache_keys.items()
+    }
+    assert got == {"one": {"a"}, "two": {"b"}}
+
+
+def _write_rows(path, n):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": [f"k{i}" for i in range(n)], "v": list(range(n))}), path)
+
+
+def _rows(spark, cache, key):
+    return read_cached(spark, cache, key).count()
+
+
+def test_rewritten_parquet_source_recomputes_its_chain(spark, tmp_path):
+    """A ``provider: parquet`` key carries the url's ``os.stat`` listing
+    signature: rewriting the file recomputes the node and its merge."""
+    cache = str(tmp_path / "cache")
+    src = str(tmp_path / "src.parquet")
+    _write_rows(src, 5)
+    dag = [
+        Configuration("src", program=f"provider: parquet\nurl: {src}\n\nonly true\n"),
+        Configuration("other", program=OTHER),
+        Configuration("both", merge=["src", "other"]),
+    ]
+    first = sync_configurations(spark, dag, cache)
+    assert first.converged and _rows(spark, cache, first.cache_keys["src"]) == 5
+    again = sync_configurations(spark, dag, cache)
+    assert set(again.statuses.values()) == {"cached"}
+    assert again.cache_keys == first.cache_keys
+    _write_rows(src, 50)
+    fresh = sync_configurations(spark, dag, cache)
+    assert fresh.statuses == {"src": "done", "other": "cached", "both": "done"}
+    assert _rows(spark, cache, fresh.cache_keys["src"]) == 50
+    assert _rows(spark, cache, fresh.cache_keys["both"]) == 50 + 2
+
+
+def test_tables_frame_is_recomputed_unless_versioned(spark, tmp_path):
+    """A ``tables=`` frame is an external input: the sync cannot see its
+    file, so the node is recomputed on every sync unless ``version``
+    pins it."""
+    cache = str(tmp_path / "cache")
+    src = str(tmp_path / "ext.parquet")
+    prog = "provider: localdata\nname: ext\n\n\nonly true\n"
+    _write_rows(src, 5)
+    cfg = [Configuration("cfg", program=prog, tables={"ext": spark.read.parquet(src)})]
+    first = sync_configurations(spark, cfg, cache)
+    assert _rows(spark, cache, first.cache_keys["cfg"]) == 5
+    _write_rows(src, 50)
+    cfg = [Configuration("cfg", program=prog, tables={"ext": spark.read.parquet(src)})]
+    second = sync_configurations(spark, cfg, cache)
+    assert second.statuses["cfg"] == "done"
+    assert _rows(spark, cache, second.cache_keys["cfg"]) == 50
+
+    pinned = [
+        Configuration("cfg", program=prog, tables={"ext": spark.read.parquet(src)}, version="v1")
+    ]
+    sync_configurations(spark, pinned, cache)
+    assert sync_configurations(spark, pinned, cache).statuses["cfg"] == "cached"
+
+
+def test_git_source_recomputes_on_a_new_commit(spark, tmp_path):
+    import subprocess
+
+    from test_collectors import _ENV, _run
+
+    repo = tmp_path / "repo"
+
+    def commit(msg):
+        (repo / "a.txt").write_text(msg)
+        _run(repo, "add", "a.txt")
+        _run(repo, "commit", "-q", "-m", msg)
+
+    subprocess.run(["git", "init", "-q", "-b", "main", str(repo)], env=_ENV, check=True, capture_output=True)
+    commit("first")
+    cache = str(tmp_path / "cache")
+    dag = [Configuration("commits", program=f"provider: git\nurl: {repo}\n\nonly true\n")]
+    first = sync_configurations(spark, dag, cache)
+    assert _rows(spark, cache, first.cache_keys["commits"]) == 1
+    commit("second")
+    second = sync_configurations(spark, dag, cache)
+    assert second.statuses["commits"] == "done"
+    got = read_cached(spark, cache, second.cache_keys["commits"])
+    assert sorted(r["message"].strip() for r in got.collect()) == ["first", "second"]
+
+
+def test_unparseable_program_dead_letters(spark, tmp_path):
+    """``_key_of`` runs outside the retry loop and never raises: a
+    program that does not parse is keyed as external and fails in
+    ``_compute`` like any other error."""
+    bad = BASE + "# not a statement\n"
+    rep = sync_configurations(
+        spark,
+        [Configuration("bad", program=bad), Configuration("okay", program=OTHER)],
+        str(tmp_path / "cache"),
+        max_retries=1,
+    )
+    assert rep.statuses == {"bad": "failed", "okay": "done"}
+    [dl] = rep.dead_letters
+    assert dl["OriginalQueue"] == "bad" and "bad" in rep.cache_keys
+
+
+def test_parquet_key_is_the_same_in_a_process_without_spark(spark, tmp_path):
+    import subprocess
+    import sys
+
+    cache = str(tmp_path / "cache")
+    src = str(tmp_path / "src.parquet")
+    _write_rows(src, 5)
+    prog = f"provider: parquet\nurl: {src}\n\nonly true\n"
+    rep = sync_configurations(spark, [Configuration("src", program=prog)], cache)
+    code = (
+        "import sys\n"
+        "from pyspark import SparkContext\n"
+        "from hobbes_spark.sync import Configuration, _key_of\n"
+        "key, live = _key_of(Configuration('src', program=sys.argv[1]), {})\n"
+        "assert SparkContext._active_spark_context is None\n"
+        "print(key, live)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code, prog],
+        env={**os.environ, "PYTHONPATH": repo},
+        check=True, capture_output=True, text=True,
+    ).stdout.split()
+    assert out == [rep.cache_keys["src"], "False"]
+
+
+def test_localdata_keys_are_md5_of_text():
+    import hashlib
+
+    from hobbes_spark.sync import _key_of
+
+    for cfg in _dag():
+        if cfg.program is not None:
+            assert _key_of(cfg, {}) == (hashlib.md5(cfg.program.encode()).hexdigest(), False)
 
 
 def test_live_fetcher_refreshes_and_version_pins(spark, tmp_path):

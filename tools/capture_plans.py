@@ -23,7 +23,6 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
     from hobbes_spark.queries import QUERIES
     from hobbes_spark.session import get_spark

@@ -4,7 +4,7 @@
 ``tools/cluster_check.py`` proved the checkpoint-heavy shapes
 value-identical under ``local-cluster[2,16,4096]``; this tool measures
 the TIMING story (round-8 item 6) — what real exchange serialization,
-off-heap shuffle and cross-JVM broadcast cost relative to ``local[32]``
+off-heap shuffle and cross-JVM broadcast cost relative to ``local[N]``
 on the same host — for the frozen r1 bench core set (``bench.py``'s
 ``_R1_CORE``). Observability only: no exit criterion, the numbers land
 in SCALE.md so cross-round comparisons have a cluster-mode anchor.
@@ -74,7 +74,7 @@ def main() -> int:
 
     cluster = _time_queries("local-cluster[2,16,4096]", sf_dir, runs)
     local = _time_queries(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]", sf_dir, runs
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]", sf_dir, runs
     )
     results = {
         n: {

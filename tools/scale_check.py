@@ -53,7 +53,6 @@ def main():
     out_dir = f"/tmp/hobbes_scale_{n}x_{sf_tag}"
     os.makedirs(out_dir, exist_ok=True)
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from hobbes_spark.session import get_spark
 
     spark = get_spark("scale_check")

@@ -18,7 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     runs = int(os.environ.get("RUNS", "3"))
 
     from hobbes_spark.queries import QUERIES
