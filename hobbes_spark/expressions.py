@@ -4,7 +4,7 @@ Reference surface (grammar `tools/hobbes-vscode/syntaxes/hobbes.YAML-tmLanguage:
 snippets `tools/hobbes-vscode/.vscode/hobbes-autocomplete.code-snippets`):
 
 * ``if [cond] {a} else {b}``      -> :func:`iff`
-* ``int (expr)``                  -> :func:`int_cast` (strict) / :func:`try_int`
+* ``int (expr)``                  -> :func:`int_cast` (strict)
 * ``regex [expr] /pat/ [$1 ...]`` -> :func:`regex` (capture-group concat)
 * ``format date "col" part``      -> :func:`format_date`
 * ``contains col [v1; v2]``       -> :func:`contains`
@@ -28,7 +28,6 @@ __all__ = [
     "qname",
     "iff",
     "int_cast",
-    "try_int",
     "regex",
     "format_date",
     "contains",
@@ -77,11 +76,6 @@ def int_cast(expr: Column | str) -> Column:
     input, matching the reference. Floats truncate toward zero.
     """
     return c(expr).cast("int")
-
-
-def try_int(expr: Column | str) -> Column:
-    """Lenient integer cast -> NULL on bad input (non-reference convenience)."""
-    return c(expr).try_cast("int")
 
 
 _GROUP_TOKEN = re.compile(r"^\$(\d+)$")

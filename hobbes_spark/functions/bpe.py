@@ -79,32 +79,19 @@ def bounded_vocab_rows(word_freq: DataFrame, max_vocab: int, caller: str) -> lis
     most ``max_vocab + 1`` rows in ONE Spark job and raise a clear error
     if the extra row exists — a caller who forgot to bound the table
     (``word_frequencies(max_words=...)``) fails fast instead of OOMing
-    the driver at 100 TB.  ``spark.sql.limit.initialNumPartitions`` is
-    raised transiently so CollectLimit scans everything in one pass
-    instead of probing one partition first (the tokenizer trainers pin
-    an exactly-one-job contract).
-
-    NOT thread-safe (ADVICE r8): the override is a session-global conf
-    (Spark exposes no per-query knob for it), so a CONCURRENT job on
-    the same SparkSession can observe the temporary 2^20 value, and the
-    restore can clobber a racing writer's own setting.  Tokenizer
-    training is a driver-side batch step here; run it from one thread,
-    or give concurrent submitters their own ``spark.newSession()``
-    (separate conf, shared context), which fully isolates the
-    override."""
+    the driver at 100 TB.  The rows are the top ``max_vocab + 1`` by
+    (freq DESC, word ASC): a sorted limit plans as a driver-merged top-k
+    over every partition in one pass, without touching session conf.
+    The trainers never depend on the row order (merge ties break on
+    ``(count desc, pair asc)``, unigram counts are order-free sums)."""
     if max_vocab < 1:
         raise ValueError(f"{caller}: max_vocab must be >= 1, got {max_vocab}")
-    spark = word_freq.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, str(1 << 20))
-    try:
-        rows = word_freq.select("word", "freq").limit(max_vocab + 1).collect()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    rows = (
+        word_freq.select("word", "freq")
+        .orderBy(F.desc("freq"), F.asc("word"))
+        .limit(max_vocab + 1)
+        .collect()
+    )
     if len(rows) > max_vocab:
         raise ValueError(
             f"{caller}: word_freq has more than max_vocab={max_vocab} "

@@ -1154,7 +1154,8 @@ def embedding_neardup_lsh(
 
     Each vector gets ``bands`` signatures of ``rows_per_band`` sign bits
     (deterministic hash-derived hyperplanes, shared with
-    :func:`hobbes_spark.functions.similarity.lsh_signature`); rows are
+    :func:`hobbes_spark.functions.similarity.lsh_bucket_topk` through
+    :func:`~hobbes_spark.functions.similarity.plane_weight_matrix`); rows are
     candidates if ANY band matches. Plan shape: one signature scan →
     explode to ``bands`` rows/vector → self-equi-join on (band, key) →
     distinct pairs → exact cosine rerank >= ``threshold``.
@@ -1185,10 +1186,10 @@ def embedding_neardup_lsh(
             [], f"id_a {df.schema[id_col].dataType.simpleString()}, "
                 f"id_b {df.schema[id_col].dataType.simpleString()}, cos double"
         )
-    # weights hashed once (bit-identical to the per-row legacy path,
-    # see plane_weight_matrix); signs via one Arrow-batched matmul —
-    # the expression form pays planes × dim interpreted lambda steps
-    # per row (measured ~5s for 5k×64-dim×72 planes; the matmul is ms)
+    # weights hashed once (see plane_weight_matrix); signs via one
+    # Arrow-batched matmul — an expression form pays planes × dim
+    # interpreted lambda steps per row (measured ~5s for 5k×64-dim×72
+    # planes; the matmul is ms)
     from hobbes_spark.functions.similarity import hyperplane_signs_arrow
 
     weights = plane_weight_matrix(df.sparkSession, bands * rows_per_band, dim)

@@ -233,35 +233,13 @@ def hard_negatives(
     return _topk(scored, k)
 
 
-def _hyperplane_sign(vec: Column, plane: int) -> Column:
-    """±-projection of ``vec`` onto a deterministic pseudo-random
-    hyperplane: weight(plane, dim) = ±1 from xxhash64 parity.
-
-    Legacy per-plane form — it rehashes (plane, dim) for EVERY ROW
-    (planes × dim xxhash64 calls per row; measured as the dominant cost
-    of LSH signatures). Kept for ragged/unknown-dim inputs; the batch
-    paths use :func:`plane_weight_matrix` + :func:`hyperplane_signs`,
-    which hash once per session and embed the weights as a literal.
-    """
-    dims = F.sequence(F.lit(0), F.size(vec) - 1)
-    terms = F.zip_with(
-        vec,
-        dims,
-        lambda x, i: x.cast("double")
-        * F.when(F.xxhash64(F.lit(plane), i).bitwiseAND(F.lit(1)) == 1, 1.0).otherwise(-1.0),
-    )
-    proj = F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
-    return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
 def plane_weight_matrix(spark, planes: int, dim: int) -> list[list[float]]:
     """The ±1 hyperplane weights as a Python matrix, ``w[plane][dim]``.
 
-    Computed by ONE tiny JVM job (``planes × dim`` rows) so the values
-    are bit-identical to what the legacy per-row expression derives —
-    ``xxhash64`` has no Python twin here, and the whole point is that
-    signatures stay byte-stable across both code paths. The matrix then
-    rides the plan as a literal: zero per-row hashing.
+    Weight ``w[p][i]`` is +1 when ``xxhash64(p, i)`` is odd, else -1,
+    computed by ONE tiny JVM job (``planes × dim`` rows) because
+    ``xxhash64`` has no Python twin here. The matrix then rides the plan
+    as a literal: zero per-row hashing.
     """
     # the matrix is collected AND re-emitted as a plan literal, so its
     # size is doubly driver-bound; 2^22 doubles (32 MiB) is far past any
@@ -298,39 +276,18 @@ def plane_weight_matrix(spark, planes: int, dim: int) -> list[list[float]]:
     return out
 
 
-def hyperplane_signs(vec: Column, weights: list[list[float]]) -> Column:
-    """``array<int>`` of 0/1 hyperplane signs, one per plane, as a
-    single expression over the literal weight matrix. Same fold order
-    (dim 0 → d-1) as the legacy path, so projections — and signs — are
-    identical. Vectors shorter/longer than the matrix dim produce NULL
-    partial sums and deterministically sign as 0."""
-    return F.transform(
-        F.lit(weights),
-        lambda w: F.when(
-            F.aggregate(
-                F.zip_with(vec, w, lambda x, wi: x.cast("double") * wi),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-            >= 0,
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-
-
 def hyperplane_signs_arrow(weights: list[list[float]]):
-    """Pandas-UDF twin of :func:`hyperplane_signs`: all plane signs in
-    one Arrow-batched numpy matmul, ``(batch × dim) @ (dim × planes)``.
+    """The LSH sign kernel: ``array<int>`` of 0/1 hyperplane signs (plane
+    p signs 1 iff ``Σ w[p][i]·x[i] ≥ 0``), all planes in one
+    Arrow-batched numpy matmul, ``(batch × dim) @ (dim × planes)``.
 
-    Dense linear algebra is the one place the expression path is
-    structurally slow — Catalyst evaluates higher-order-function lambdas
-    per element (planes × dim interpreted steps per row), where BLAS
-    does the same work vectorized. Signs are identical except for
-    projections within float rounding of exactly 0 (sum order differs);
-    identical vectors always get identical signs on either path, which
-    is the property the dedup recall guarantees rest on. Rows whose
-    length differs from the weight matrix dim sign as all-zero
-    (deterministic, mirroring the expression path's NULL collapse).
+    Dense linear algebra is the one place a Catalyst expression is
+    structurally slow — it evaluates higher-order-function lambdas per
+    element (planes × dim interpreted steps per row), where BLAS does
+    the same work vectorized. Identical vectors always get identical
+    signs, which is the property the dedup recall guarantees rest on.
+    Rows whose length differs from the weight matrix dim sign as
+    all-zero (deterministic).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -385,26 +342,9 @@ def corpus_dim(df: DataFrame, vec_col: str) -> int | None:
     return int(row["hi"])
 
 
-def lsh_signature(
-    vec: Column, planes: int = 12, weights: list[list[float]] | None = None
-) -> Column:
-    """``planes``-bit random-hyperplane signature as a long.
-
-    Pass ``weights`` (from :func:`plane_weight_matrix`) to skip per-row
-    hashing; signatures are identical either way."""
-    if weights is not None:
-        return _pack_bits(hyperplane_signs(vec, weights[:planes]), planes)
-    sig = F.lit(0).cast("bigint")
-    for p in range(planes):
-        sig = sig + _hyperplane_sign(vec, p) * F.lit(2**p).cast("bigint")
-    return sig
-
-
 def _pack_bits(signs: Column, planes: int) -> Column:
     """0/1 sign array -> little-endian packed long. ONE spelling of the
-    packing order, shared by the direct and materialized-column paths —
-    the parquet dump-dir replay depends on both producing identical
-    buckets."""
+    packing order — the parquet dump-dir replay depends on it."""
     sig = F.lit(0).cast("bigint")
     for p in range(planes):
         sig = sig + F.element_at(signs, p + 1).cast("bigint") * F.lit(2**p).cast(
@@ -490,18 +430,16 @@ def lsh_bucket_topk(
         out = df.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias(id_alias), F.col(vec_col).alias(vec_alias)
         )
-        if weights is not None:
-            # Arrow matmul for the signs, then cheap bit packing from
-            # the MATERIALIZED column — the signature expression must
-            # not be inlined into every probe variant (13 copies at
-            # radius 1)
-            out = out.withColumn(
-                "__s", hyperplane_signs_arrow(weights)(F.col(vec_alias))
-            )
-            return out.withColumn("bucket", _pack_bits(F.col("__s"), planes)).drop(
-                "__s"
-            )
-        return out.withColumn("bucket", lsh_signature(F.col(vec_alias), planes))
+        if weights is None:
+            # empty or all-NULL corpus: no vector to bucket against, so
+            # a NULL bucket (which joins nothing) keeps the plan's
+            # columns without hashing any row
+            return out.withColumn("bucket", F.lit(None).cast("bigint"))
+        # Arrow matmul for the signs, then cheap bit packing from the
+        # MATERIALIZED column — the signature expression must not be
+        # inlined into every probe variant (13 copies at radius 1)
+        out = out.withColumn("__s", hyperplane_signs_arrow(weights)(F.col(vec_alias)))
+        return out.withColumn("bucket", _pack_bits(F.col("__s"), planes)).drop("__s")
 
     # per-row norms hoisted below the bucket join (see _cosine_hoisted);
     # when dumping, the norm column rides the parquet roundtrip —

@@ -31,7 +31,6 @@ from hobbes_spark.expressions import md5_prefix_bigint
 __all__ = [
     "hll_group_sketches",
     "hll_rollup_estimate",
-    "hll_estimate",
     "hll_register_table",
     "hll_table_rollup",
     "theta_group_sketches",
@@ -85,12 +84,6 @@ def hll_rollup_estimate(
     return gb.agg(
         F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col))).alias(out_col)
     )
-
-
-def hll_estimate(sketch: Column | str) -> Column:
-    """Estimate of one sketch value (row-wise)."""
-    col = F.col(sketch) if isinstance(sketch, str) else sketch
-    return F.hll_sketch_estimate(col)
 
 
 # --------------------------------------------------------------------- #

@@ -26,7 +26,6 @@ __all__ = [
     "tokens",
     "token_count",
     "wordlike_token_count",
-    "stopword_ratio",
     "stopword_ratio_t",
     "alpha_ratio",
     "punct_ratio",
@@ -87,7 +86,7 @@ def wordlike_token_count(col: Column | str) -> Column:
 
 
 def stopword_ratio_t(toks_l: Column) -> Column:
-    """:func:`stopword_ratio` given pre-lowercased tokens.
+    """Fraction of pre-lowercased whitespace tokens that are stopwords.
 
     The ``_t`` variants exist for pipelines that stage the token array
     as a projected column and score several metrics from it: passing
@@ -96,11 +95,6 @@ def stopword_ratio_t(toks_l: Column) -> Column:
     staged multi-referenced column is tokenized once."""
     hits = F.size(F.filter(toks_l, lambda x: x.isin(*STOPWORDS)))
     return hits / F.nullif(F.size(toks_l), F.lit(0))
-
-
-def stopword_ratio(col: Column | str) -> Column:
-    """Fraction of whitespace tokens that are (lowercased) stopwords."""
-    return stopword_ratio_t(tokens(F.lower(c(col))))
 
 
 _ASCII_LETTERS = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"

@@ -41,9 +41,10 @@ def roundtrip_parquet(df, path: str):
     bytes, which is how the correctness gate oracles intermediates that
     SQL cannot recompute (xxhash64 signatures, LSH bucket ids). Also a
     plain materialization point — the re-read plan is a bare scan, so
-    every consumer shares the one computation."""
+    every consumer shares the one computation. The read-back takes the
+    schema just written (``df.schema``), so it starts no inference job."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 _STAGED: dict = {}

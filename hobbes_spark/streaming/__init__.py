@@ -20,16 +20,11 @@ from hobbes_spark.streaming.joins import interval_join
 from hobbes_spark.streaming.ingest import (
     minhash_ingest_writer,
     read_signature_store,
-    start_minhash_ingest,
 )
-from hobbes_spark.streaming.sinks import (
-    idempotent_parquet_writer,
-    start_idempotent_sink,
-)
+from hobbes_spark.streaming.sinks import idempotent_parquet_writer
 
 __all__ = [
     "idempotent_parquet_writer",
-    "start_idempotent_sink",
     "stream_events",
     "stream_parquet",
     "tumbling_agg",

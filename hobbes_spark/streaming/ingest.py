@@ -13,13 +13,17 @@ turns that into a continuous pipeline with ``foreachBatch``:
       → append pairs    to  <store>/pairs/_batch_id=N/
       → append sigs     to  <store>/signatures/_batch_id=N/
 
-Exactly-once: both writes are keyed by ``_batch_id`` with dynamic
-partition overwrite (same recipe as ``streaming/sinks.py``), and the
-"store so far" read **filters ``_batch_id < N``** — a replayed batch
-sees exactly the store state of its first attempt, rewrites exactly its
-own two partitions, and cannot pair against its own half-written
-output. Union of all pair partitions after any number of replays ==
-``minhash_pairs`` over everything ingested (asserted in tests).
+Exactly-once: every writer here (MinHash, and the HLL / count-min sketch
+stores below) is :func:`hobbes_spark.streaming.sinks.store_writer` over
+a per-batch computation — one store guard (parameters pinned in
+``<store>/_meta``, no rewind), then one
+:func:`~hobbes_spark.streaming.sinks.write_batch` (``_batch_id``-keyed
+dynamic partition overwrite) per store table. The MinHash "store so
+far" read **filters ``_batch_id < N``** — a replayed batch sees exactly
+the store state of its first attempt, rewrites exactly its own two
+partitions, and cannot pair against its own half-written output. Union
+of all pair partitions after any number of replays == ``minhash_pairs``
+over everything ingested (asserted in tests).
 
 State lives in parquet, not executor memory: restarts are free, the
 store is directly queryable, and its size is docs × num_hashes longs —
@@ -33,14 +37,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hobbes_spark.streaming.sinks import _path_exists, store_writer
+
 __all__ = [
     "minhash_ingest_writer",
-    "start_minhash_ingest",
     "read_signature_store",
     "hll_ingest_writer",
-    "start_hll_ingest",
     "cms_ingest_writer",
-    "start_cms_ingest",
     "cms_store_sketch",
 ]
 
@@ -62,102 +65,20 @@ def read_signature_store(
     spark: SparkSession, store_dir: str, before_batch: int | None = None
 ) -> DataFrame | None:
     """Signatures ingested so far (optionally only strictly before a
-    batch id — the replay-safety filter). None if the store is empty."""
-    from pyspark.errors import AnalysisException
+    batch id — the replay-safety filter). None if the store is empty.
 
-    try:
-        df = spark.read.parquet(f"{store_dir}/signatures")
-    except AnalysisException as e:
-        # ONLY the first-batch missing-directory case may mean "empty
-        # base". Any other failure (transient FS error, corrupt footer,
-        # permissions) must raise: treating it as an empty corpus would
-        # silently drop every new-vs-base pair for this batch, and the
-        # checkpoint would commit the loss permanently.
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
+    ONLY a missing signatures directory means "empty base". Any other
+    read failure (transient FS error, corrupt footer, permissions)
+    raises: treating it as an empty corpus would silently drop every
+    new-vs-base pair for this batch, and the checkpoint would commit the
+    loss permanently."""
+    path = f"{store_dir}/signatures"
+    if not _path_exists(spark, path):
+        return None
+    df = spark.read.parquet(path)
     if before_batch is not None:
         df = df.filter(F.col("_batch_id") < before_batch)
     return df.select("id", "sig")
-
-
-def _check_store_meta(
-    spark: SparkSession, store_dir: str, params: "dict[str, object]"
-) -> None:
-    """Pin the signature-store parameters on first write; refuse to mix.
-
-    Signatures are only comparable when (num_hashes, hash_fn, k, bands)
-    match: restarting the ingest with different parameters would silently
-    interleave incompatible signature widths/hash families in
-    ``<store>/signatures`` and every subsequent banding pass against the
-    mixed base would emit garbage pairs. The metadata row is written
-    through Spark (mode=ignore ⇒ first writer wins), so any filesystem
-    the store itself lives on works — no local-FS assumption."""
-    meta_path = f"{store_dir}/_meta"
-    pinned = [(k, str(v)) for k, v in sorted(params.items())]
-    from pyspark.errors import AnalysisException
-
-    try:
-        existing = {
-            r["key"]: r["value"] for r in spark.read.json(meta_path).collect()
-        }
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        existing = None
-    if existing is None:
-        (
-            spark.createDataFrame(pinned, "key string, value string")
-            .coalesce(1)
-            .write.mode("ignore")
-            .json(meta_path)
-        )
-        return
-    mismatches = {
-        k: (existing.get(k), v) for k, v in pinned if existing.get(k) != v
-    }
-    if mismatches:
-        raise ValueError(
-            f"ingest store {store_dir!r} was created with different "
-            f"parameters; refusing to mix incompatible sketch/signature "
-            f"state (stored vs requested): {mismatches}"
-        )
-
-
-def _assert_batch_monotonic(
-    spark: SparkSession, store_dir: str, table: str, batch_id: int
-) -> None:
-    """Refuse a batch id that would REWIND the store. Micro-batch
-    semantics only ever legitimately replay the LAST (possibly
-    uncommitted) batch, so an incoming id strictly below the store's
-    max means the query is running a FRESH checkpoint against an
-    existing store: its epoch counter restarted at 0, its
-    ``_batch_id < N`` base reads would hide the whole existing corpus,
-    and its dynamic overwrites would silently clobber old partitions —
-    permanent data loss with no error. Partition-column-only read (no
-    row data); callers invoke this once per query run."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = (
-            spark.read.parquet(f"{store_dir}/{table}")
-            .agg(F.max("_batch_id").alias("m"))
-            .first()
-        )
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return
-        raise
-    max_seen = row["m"] if row else None
-    if max_seen is not None and batch_id < max_seen:
-        raise ValueError(
-            f"ingest store {store_dir!r} already holds batches up to "
-            f"{max_seen} but this query is at batch {batch_id} — it is "
-            "running a NEW checkpoint against an OLD store, which would "
-            "hide the existing base and overwrite its partitions. Point "
-            "the query at its original checkpoint, or start a fresh "
-            "store directory."
-        )
 
 
 def minhash_ingest_writer(
@@ -187,22 +108,8 @@ def minhash_ingest_writer(
         minhash_signatures_df,
     )
 
-    run_state = {"validated": False}
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
         spark = batch_df.sparkSession
-        if not run_state["validated"]:
-            # once per query run: parameters and store identity cannot
-            # change for the lifetime of the query, so re-reading _meta
-            # and the partition listing per microbatch is pure overhead
-            _check_store_meta(
-                spark,
-                store_dir,
-                {"num_hashes": num_hashes, "hash_fn": hash_fn, "k": k,
-                 "bands": bands},
-            )
-            _assert_batch_monotonic(spark, store_dir, "signatures", batch_id)
-            run_state["validated"] = True
         new_sigs = minhash_signatures_df(
             batch_df, id_col, text_col, num_hashes, hash_fn, k
         )
@@ -229,36 +136,14 @@ def minhash_ingest_writer(
             broadcast_new=broadcast_new,
             new_sigs=new_sigs,
         )
-        for sub, df in (("pairs", pairs), ("signatures", new_sigs)):
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(f"{store_dir}/{sub}")
-            )
+        return {"pairs": pairs, "signatures": new_sigs}
 
-    return write
-
-
-def start_minhash_ingest(
-    stream_docs: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    available_now: bool = True,
-    **writer_kwargs,
-):
-    """Run the ingest over a streaming document DataFrame.
-    ``available_now=True`` drains the backlog and stops (backfill);
-    ``False`` keeps consuming. Pairs land under ``<store>/pairs``,
-    signatures under ``<store>/signatures``."""
-    writer = minhash_ingest_writer(store_dir, **writer_kwargs)
-    builder = stream_docs.writeStream.foreachBatch(writer).option(
-        "checkpointLocation", checkpoint
+    return store_writer(
+        store_dir,
+        {"num_hashes": num_hashes, "hash_fn": hash_fn, "k": k, "bands": bands},
+        "signatures",
+        step,
     )
-    if available_now:
-        builder = builder.trigger(availableNow=True)
-    return builder.start()
 
 
 def hll_ingest_writer(
@@ -284,48 +169,14 @@ def hll_ingest_writer(
     rollup spanning the change blows up."""
     from hobbes_spark.functions.sketches import hll_group_sketches
 
-    run_state = {"validated": False}
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        if not run_state["validated"]:
-            _check_store_meta(
-                batch_df.sparkSession,
-                store_dir,
-                {"kind": "hll", "keys": ",".join(keys), "col": col, "lgk": lgk},
-            )
-            _assert_batch_monotonic(
-                batch_df.sparkSession, store_dir, "sketches", batch_id
-            )
-            run_state["validated"] = True
-        (
-            hll_group_sketches(batch_df, keys, col, lgk)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{store_dir}/sketches")
-        )
-
-    return write
-
-
-def start_hll_ingest(
-    stream_df: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    keys: "list[str]",
-    col: str,
-    lgk: int = 12,
-    available_now: bool = True,
-):
-    """Run the sketch ingest over a stream; see :func:`hll_ingest_writer`."""
-    writer = hll_ingest_writer(store_dir, keys, col, lgk)
-    builder = stream_df.writeStream.foreachBatch(writer).option(
-        "checkpointLocation", checkpoint
+    return store_writer(
+        store_dir,
+        {"kind": "hll", "keys": ",".join(keys), "col": col, "lgk": lgk},
+        "sketches",
+        lambda batch_df, _: {
+            "sketches": hll_group_sketches(batch_df, keys, col, lgk)
+        },
     )
-    if available_now:
-        builder = builder.trigger(availableNow=True)
-    return builder.start()
 
 
 def cms_ingest_writer(
@@ -346,50 +197,14 @@ def cms_ingest_writer(
     store _meta (mixed depth/width cells would silently mis-bucket)."""
     from hobbes_spark.functions.sketches import cms_build
 
-    run_state = {"validated": False}
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        if not run_state["validated"]:
-            _check_store_meta(
-                batch_df.sparkSession,
-                store_dir,
-                {"kind": "cms", "depth": depth, "width": width,
-                 "hash_fn": hash_fn},
-            )
-            _assert_batch_monotonic(
-                batch_df.sparkSession, store_dir, "cells", batch_id
-            )
-            run_state["validated"] = True
-        (
-            cms_build(batch_df, col, depth, width, hash_fn)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{store_dir}/cells")
-        )
-
-    return write
-
-
-def start_cms_ingest(
-    stream_df: DataFrame,
-    store_dir: str,
-    checkpoint: str,
-    col: str,
-    depth: int = 4,
-    width: int = 4096,
-    hash_fn: str = "xxhash64",
-    available_now: bool = True,
-):
-    """Run the count-min ingest over a stream; see :func:`cms_ingest_writer`."""
-    writer = cms_ingest_writer(store_dir, col, depth, width, hash_fn)
-    builder = stream_df.writeStream.foreachBatch(writer).option(
-        "checkpointLocation", checkpoint
+    return store_writer(
+        store_dir,
+        {"kind": "cms", "depth": depth, "width": width, "hash_fn": hash_fn},
+        "cells",
+        lambda batch_df, _: {
+            "cells": cms_build(batch_df, col, depth, width, hash_fn)
+        },
     )
-    if available_now:
-        builder = builder.trigger(availableNow=True)
-    return builder.start()
 
 
 def cms_store_sketch(spark: SparkSession, store_dir: str) -> DataFrame:

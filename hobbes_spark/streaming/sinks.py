@@ -12,6 +12,17 @@ replay. No Delta/Iceberg needed: dynamic partition overwrite on a
 ``_batch_id`` partition column gives replace-not-duplicate semantics on
 any parquet-compatible store.
 
+This module holds that rule once, for every ``foreachBatch`` writer in
+the package:
+
+* :func:`write_batch` — THE batch-keyed write; every sink and every
+  ingest store table goes through it.
+* :func:`store_writer` — THE store guard for stores a query extends
+  batch by batch (the MinHash / HLL / count-min ingests in
+  ``streaming/ingest.py``): parameters pinned in ``<store>/_meta`` and
+  a refusal to rewind, checked once per query run, then one
+  :func:`write_batch` per store table.
+
 At 100 TB the same shape holds: each microbatch lands as one partition
 directory; a replayed batch atomically rewrites its own directory and
 nothing else; readers see append-only growth keyed by batch.
@@ -19,16 +30,37 @@ nothing else; readers see append-only growth keyed by batch.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+from collections.abc import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
+    "write_batch",
     "idempotent_parquet_writer",
-    "start_idempotent_sink",
     "quality_gated_writer",
+    "store_writer",
 ]
+
+
+def write_batch(
+    df: DataFrame,
+    batch_id: int,
+    path: str,
+    extra_partition_cols: Sequence[str] = (),
+) -> None:
+    """Write ``df`` as batch ``batch_id`` of the parquet table at
+    ``path``: partitioned by ``_batch_id`` (+ optional business
+    partitions), dynamic partition overwrite. Replaying a batch id
+    rewrites exactly that batch's partition and nothing else."""
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id", *extra_partition_cols)
+        .parquet(path)
+    )
 
 
 def idempotent_parquet_writer(
@@ -43,38 +75,9 @@ def idempotent_parquet_writer(
     (checkpointed offsets, batch-keyed overwrite) is the exactly-once
     contract.
     """
-    parts = ["_batch_id", *(extra_partition_cols or [])]
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(path)
-        )
-
-    return write
-
-
-def start_idempotent_sink(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    extra_partition_cols: list[str] | None = None,
-    available_now: bool = True,
-):
-    """Wire a streaming DataFrame into the idempotent parquet sink with
-    a checkpoint. ``available_now=True`` drains the current backlog and
-    stops (backfill mode); ``False`` runs continuously."""
-    writer = idempotent_parquet_writer(path, extra_partition_cols)
-    builder = (
-        stream_df.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
+    return functools.partial(
+        write_batch, path=path, extra_partition_cols=extra_partition_cols or ()
     )
-    if available_now:
-        builder = builder.trigger(availableNow=True)
-    return builder.start()
 
 
 def quality_gated_writer(
@@ -110,15 +113,12 @@ def quality_gated_writer(
         # the collected rows, instead of executing the report plan twice
         # (once for the parquet write, once for a min() agg)
         rows = validate(batch_df, checks).collect()
-        (
+        write_batch(
             spark.createDataFrame(
                 rows, "check string, n_violations bigint, passed boolean"
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(report_path)
+            ),
+            batch_id,
+            report_path,
         )
         # fail CLOSED: a check whose result is NULL (indeterminate —
         # e.g. a custom check without the built-ins' empty-safe
@@ -130,13 +130,7 @@ def quality_gated_writer(
             raise RuntimeError(
                 f"quality gate failed for batch {batch_id}; report at {report_path}"
             )
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(target)
-        )
+        write_batch(batch_df, batch_id, target)
         # a REPLAY whose verdict flipped (time-dependent check) must not
         # leave this batch in both targets: clear the opposite one's
         # partition after the decisive write
@@ -146,11 +140,122 @@ def quality_gated_writer(
     return write
 
 
-def _delete_partition(spark, base_path: str, batch_id: int) -> None:
-    """Remove ``<base_path>/_batch_id=<id>`` if present (Hadoop FS API,
-    so object stores work like local disks)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{base_path}/_batch_id={batch_id}")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, True)
+def store_writer(
+    store_dir: str,
+    params: Mapping[str, object],
+    guard_table: str,
+    step: Callable[[DataFrame, int], Mapping[str, DataFrame]],
+) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` function for a store that a query extends batch
+    by batch under ``store_dir``.
+
+    Once per query run (parameters and store identity cannot change for
+    the lifetime of the query, so re-reading ``_meta`` and the
+    partition listing per microbatch would be pure overhead) it pins
+    ``params`` in ``<store>/_meta`` (:func:`_check_store_meta`) and
+    refuses a batch id that would rewind ``<store>/<guard_table>``
+    (:func:`_assert_batch_monotonic`). Then every batch, ``step(batch_df,
+    batch_id)`` returns ``{table: df}`` and each ``df`` is written as
+    that batch of ``<store>/<table>`` by :func:`write_batch`, in the
+    order given."""
+    validated = False
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal validated
+        if not validated:
+            spark = batch_df.sparkSession
+            _check_store_meta(spark, store_dir, params)
+            _assert_batch_monotonic(spark, store_dir, guard_table, batch_id)
+            validated = True
+        for table, df in step(batch_df, batch_id).items():
+            write_batch(df, batch_id, f"{store_dir}/{table}")
+
+    return write
+
+
+def _check_store_meta(
+    spark: SparkSession, store_dir: str, params: Mapping[str, object]
+) -> None:
+    """Pin the store parameters on first write; refuse to mix.
+
+    Sketches and signatures are only comparable when their parameters
+    match: restarting an ingest with different ones (MinHash width or
+    hash family, HLL ``lgk``, count-min depth/width) would silently
+    interleave incompatible state in the store and every later rollup or
+    banding pass over it would be garbage. The metadata rows are
+    ``(key, str(value))`` sorted by key, written through Spark (mode=ignore
+    ⇒ first writer wins), so any filesystem the store itself lives on
+    works — no local-FS assumption."""
+    meta_path = f"{store_dir}/_meta"
+    pinned = [(k, str(v)) for k, v in sorted(params.items())]
+    if not _path_exists(spark, meta_path):
+        (
+            spark.createDataFrame(pinned, "key string, value string")
+            .coalesce(1)
+            .write.mode("ignore")
+            .json(meta_path)
+        )
+        return
+    existing = {
+        r["key"]: r["value"]
+        for r in spark.read.schema("key string, value string").json(meta_path).collect()
+    }
+    mismatches = {
+        k: (existing.get(k), v) for k, v in pinned if existing.get(k) != v
+    }
+    if mismatches:
+        raise ValueError(
+            f"ingest store {store_dir!r} was created with different "
+            f"parameters; refusing to mix incompatible sketch/signature "
+            f"state (stored vs requested): {mismatches}"
+        )
+
+
+def _assert_batch_monotonic(
+    spark: SparkSession, store_dir: str, table: str, batch_id: int
+) -> None:
+    """Refuse a batch id that would REWIND the store. Micro-batch
+    semantics only ever legitimately replay the LAST (possibly
+    uncommitted) batch, so an incoming id strictly below the store's
+    max means the query is running a FRESH checkpoint against an
+    existing store: its epoch counter restarted at 0, its
+    ``_batch_id < N`` base reads would hide the whole existing corpus,
+    and its dynamic overwrites would silently clobber old partitions —
+    permanent data loss with no error. Partition-column-only read (no
+    row data)."""
+    path = f"{store_dir}/{table}"
+    if not _path_exists(spark, path):
+        return
+    row = spark.read.parquet(path).agg(F.max("_batch_id").alias("m")).first()
+    max_seen = row["m"] if row else None
+    if max_seen is not None and batch_id < max_seen:
+        raise ValueError(
+            f"ingest store {store_dir!r} already holds batches up to "
+            f"{max_seen} but this query is at batch {batch_id} — it is "
+            "running a NEW checkpoint against an OLD store, which would "
+            "hide the existing base and overwrite its partitions. Point "
+            "the query at its original checkpoint, or start a fresh "
+            "store directory."
+        )
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(Path, FileSystem)`` for ``path`` through the Hadoop FS API, so
+    object stores work like local disks."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists yet — the one "store not created yet"
+    probe. A missing path means an empty store / first batch; every
+    other read failure stays an error at the read itself."""
+    p, fs = _hadoop_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def _delete_partition(spark: SparkSession, base_path: str, batch_id: int) -> None:
+    """Remove ``<base_path>/_batch_id=<id>`` if present (deleting a
+    missing path is a no-op that returns false)."""
+    p, fs = _hadoop_path(spark, f"{base_path}/_batch_id={batch_id}")
+    fs.delete(p, True)

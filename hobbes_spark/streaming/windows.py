@@ -18,7 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["tumbling_agg", "sliding_agg", "session_agg", "default_aggs"]
+__all__ = ["tumbling_agg", "sliding_agg", "session_agg"]
 
 
 def _default_aggs() -> list[Column]:
@@ -27,14 +27,6 @@ def _default_aggs() -> list[Column]:
         F.sum("value").alias("sum_value"),
         F.avg("value").alias("avg_value"),
     ]
-
-
-def default_aggs() -> "list[Column]":
-    """Fresh default aggregation list (count / sum / avg of ``value``).
-    A FUNCTION, not a SCREAMING_CASE constant: the constant spelling
-    invited ``aggs=DEFAULT_AGGS`` (uncalled), which died as an opaque
-    TypeError inside ``agg(*aggs)``."""
-    return _default_aggs()
 
 
 def _windowed(

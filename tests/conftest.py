@@ -48,3 +48,25 @@ def spark_jobs(spark):
         return out, len(jobs), stages
 
     return run
+
+
+@pytest.fixture
+def conf_writes(monkeypatch):
+    """Every ``spark.conf.set``/``unset`` made during the test, from any
+    thread, as ``(op, key)`` pairs; the writes still take effect."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls: list = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def set_(self, key, value):
+        calls.append(("set", key))
+        return real_set(self, key, value)
+
+    def unset(self, key):
+        calls.append(("unset", key))
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", set_)
+    monkeypatch.setattr(RuntimeConfig, "unset", unset)
+    return calls

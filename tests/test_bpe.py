@@ -105,6 +105,24 @@ def test_learn_bpe_runs_one_spark_job(spark):
     assert len(ids) == 1, f"learn_bpe ran {len(ids)} jobs; must be exactly 1"
 
 
+def test_trainers_write_no_session_conf(spark, conf_writes):
+    """The bounded vocab collect takes a sorted top-k instead of raising
+    a session-global limit conf: a job running concurrently on the same
+    SparkSession (sync's thread pool) must never see a value it did not
+    set, and the merges learned stay the same."""
+    from hobbes_spark.functions.bpe import learn_byte_bpe
+    from hobbes_spark.functions.unigram import learn_unigram_lm
+
+    wf = _wf(spark, [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)])
+    merges = learn_bpe(wf, num_merges=4).collect()
+    assert [(r["lhs"], r["rhs"]) for r in merges] == [
+        ("e", "s"), ("es", "t"), ("est", END_TOKEN), ("l", "o")
+    ]
+    assert learn_byte_bpe(wf, num_merges=3).count() == 3
+    assert learn_unigram_lm(wf, vocab_size=12).count() > 0
+    assert conf_writes == []
+
+
 # --------------------------------------------------------------------- #
 # byte-level BPE (GPT-2 family)
 # --------------------------------------------------------------------- #

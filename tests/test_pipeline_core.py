@@ -659,6 +659,27 @@ def test_stage_parquet_once_restages_a_foreign_dump(spark, tmp_path):
     assert sorted(r["a"] for r in spark.read.parquet(path).collect()) == [1, 2]
 
 
+def test_roundtrip_parquet_reads_back_with_the_written_schema(
+    spark, tmp_path, spark_jobs
+):
+    """The dump's read-back reuses ``df.schema``: the roundtrip runs the
+    jobs of the write alone (no schema-inference job), and reads back
+    the written rows."""
+    from hobbes_spark.sources.sinks import roundtrip_parquet
+
+    df = spark.createDataFrame(
+        [(1, "a", [1.0, 2.0]), (2, None, None), (3, "c", [])],
+        "id bigint, s string, v array<double>",
+    )
+    _, write_jobs, _ = spark_jobs(
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "plain"))
+    )
+    back, jobs, _ = spark_jobs(lambda: roundtrip_parquet(df, str(tmp_path / "dump")))
+    assert jobs == write_jobs
+    assert back.schema == df.schema
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
 def test_data_result_encodes_nested_and_decimal(spark):
     import json as _json
 

@@ -191,6 +191,25 @@ def test_null_vectors_excluded_from_lsh_and_cosine(spark):
         assert all(r["cos"] is not None for r in out), fn.__name__
 
 
+@pytest.mark.parametrize(
+    "rows", [[], [(1, None), (2, None)]], ids=["empty", "all_null"]
+)
+def test_lsh_corpus_without_vectors_returns_no_rows(spark, rows):
+    """No corpus vector means no bucket to probe: 0 rows, with the same
+    columns and types as a non-empty result."""
+    from hobbes_spark.functions.similarity import lsh_bucket_topk
+
+    queries = _vec_df(spark, [(0, [1.0, 1.0]), (5, None)])
+    out = lsh_bucket_topk(_vec_df(spark, rows), queries, k=5)
+    full = lsh_bucket_topk(_vec_df(spark, [(1, [1.0, 1.0])]), queries, k=5)
+    assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    assert out.collect() == []
+    assert full.count() == 1
+
+
 def test_ivf_tolerates_null_vectors(spark):
     from hobbes_spark.functions.similarity import ivf_topk
 

@@ -439,10 +439,7 @@ def test_minhash_ingest_matches_batch_pairs(spark, sf_dir, tmp_path):
     partitions, exactly the batch minhash_pairs of the full corpus —
     and a replayed batch (same batch_id) must not duplicate anything."""
     from hobbes_spark.functions.dedup import minhash_pairs
-    from hobbes_spark.streaming.ingest import (
-        minhash_ingest_writer,
-        start_minhash_ingest,
-    )
+    from hobbes_spark.streaming.ingest import minhash_ingest_writer
     from hobbes_spark.pipeline import Pipeline
 
     docs = Pipeline.table(spark, sf_dir, "documents").df.select("doc_id", "text")
@@ -464,7 +461,12 @@ def test_minhash_ingest_matches_batch_pairs(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_minhash_ingest(stream, store, str(tmp_path / "ckpt"))
+    q = (
+        stream.writeStream.foreachBatch(minhash_ingest_writer(store))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
     assert q.awaitTermination(300)
 
     got = spark.read.parquet(f"{store}/pairs")
@@ -499,13 +501,18 @@ def test_hll_ingest_rollup_equals_direct_sketch(spark, sf_dir, tmp_path):
         hll_rollup_estimate,
     )
     from hobbes_spark.pipeline import Pipeline
-    from hobbes_spark.streaming.ingest import hll_ingest_writer, start_hll_ingest
+    from hobbes_spark.streaming.ingest import hll_ingest_writer
 
     ev = Pipeline.table(spark, sf_dir, "events").df
     stream = stream_events(spark, f"{sf_dir}/events.parquet")
     store = str(tmp_path / "store")
-    q = start_hll_ingest(
-        stream, store, str(tmp_path / "ckpt"), ["event_type"], "user_id"
+    q = (
+        stream.writeStream.foreachBatch(
+            hll_ingest_writer(store, ["event_type"], "user_id")
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
     assert q.awaitTermination(300)
 
@@ -584,7 +591,6 @@ def test_cms_ingest_rollup_equals_direct_sketch(spark, sf_dir, tmp_path):
     from hobbes_spark.streaming.ingest import (
         cms_ingest_writer,
         cms_store_sketch,
-        start_cms_ingest,
     )
     import glob
 

@@ -46,6 +46,25 @@ def _dag():
     ]
 
 
+def test_sync_and_odata_page_write_no_session_conf(spark, tmp_path, conf_writes):
+    """No sync or serve path reaches a session-global conf flip (such as
+    the streaming replay's ``pinned_shuffle_partitions``): sync runs its
+    nodes on a thread pool over one SparkSession, where a flip would leak
+    into concurrent jobs. The one write allowed is the idempotent
+    nanosAsLong switch that reading nanosecond parquet needs."""
+    from hobbes_spark.sources.odata_serve import odata_response
+
+    cache = str(tmp_path / "cache")
+    rep = sync_configurations(spark, _dag(), cache)
+    assert rep.converged
+    page = odata_response(
+        read_cached(spark, cache, rep.cache_keys["joined"]),
+        {"$orderby": "k", "$top": "2", "$count": "true"},
+    )
+    assert len(page["value"]) == 2 and page["@odata.count"] == 3
+    assert {key for _, key in conf_writes} <= {"spark.sql.legacy.parquet.nanosAsLong"}
+
+
 def test_dag_materializes_in_dependency_order(spark, tmp_path):
     cache = str(tmp_path / "cache")
     rep = sync_configurations(spark, _dag(), cache)
