@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hobbes_spark.pipeline import read_parquet_any_ts
+
 __all__ = [
     "cosine",
     "cosine_topk",
@@ -546,10 +548,13 @@ def ivf_write(index_dir: str, assigned: DataFrame, centroids: DataFrame) -> None
 
 
 def ivf_read(spark, index_dir: str) -> "tuple[DataFrame, DataFrame]":
-    """Load an index written by :func:`ivf_write`."""
+    """Load an index written by :func:`ivf_write`. The inverted file
+    comes back partition-discovered on ``cell``; re-opening an unchanged
+    index reuses its schemas (``read_parquet_any_ts``) and launches no
+    Spark job."""
     return (
-        spark.read.parquet(f"{index_dir}/assigned"),
-        spark.read.parquet(f"{index_dir}/centroids"),
+        read_parquet_any_ts(spark, f"{index_dir}/assigned"),
+        read_parquet_any_ts(spark, f"{index_dir}/centroids"),
     )
 
 
@@ -1005,14 +1010,15 @@ def ivf_pq_read(
     """Load an index written by :func:`ivf_pq_write` — ``(encoded,
     centroids, codebooks)``, search-ready for :func:`ivf_pq_search`.
     The code table comes back partition-discovered on ``cell``, so the
-    probe join prunes directories via dynamic partition pruning."""
+    probe join prunes directories via dynamic partition pruning. Schemas
+    are resolved as in :func:`ivf_read`; the codebook row is one job."""
     import json
 
     books = json.loads(
-        spark.read.parquet(f"{index_dir}/codebooks").first()["codebooks"]
+        read_parquet_any_ts(spark, f"{index_dir}/codebooks").first()["codebooks"]
     )
     return (
-        spark.read.parquet(f"{index_dir}/encoded"),
-        spark.read.parquet(f"{index_dir}/centroids"),
+        read_parquet_any_ts(spark, f"{index_dir}/encoded"),
+        read_parquet_any_ts(spark, f"{index_dir}/centroids"),
         books,
     )

@@ -16,7 +16,15 @@ a served filter prunes the parquet scan like any other), ``$select``
 prunes columns, ``$orderby``/``$top``/``$skip`` become
 sort/limit/offset, and the envelope emitter collects a bounded page and
 streams an unbounded one through ``toLocalIterator``, so serving a page
-never collects the full table to the driver. An HTTP
+never collects the full table to the driver. ``$count=true`` on a
+bounded, sorted page costs no extra job: the post-``$filter`` frame
+carries an observed ``count(1)`` metric, and the page's one
+``collect()`` fills it. That count is only whole when the page reads
+every filtered row, so it is taken only when the executed plan is a
+``TakeOrderedAndProject`` over an input without output ordering; an
+unsorted ``$top`` (a ``CollectLimit`` that stops early), an input
+already ordered by the sort keys, or an unbounded response keep a
+separate ``count()``. An HTTP
 wrapper is a ~10-line flask/fastapi handler around
 :func:`odata_response`; it is deliberately NOT included (no server
 dependencies in the engine), matching the reference's split between the
@@ -39,7 +47,7 @@ from __future__ import annotations
 import re
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hobbes_spark.sources.sinks import json_cell
@@ -401,18 +409,26 @@ def _check_supported(options: Mapping[str, str]) -> None:
             )
 
 
-def _apply(df: DataFrame, options: Mapping[str, str]):
+def _apply(
+    df: DataFrame,
+    options: Mapping[str, str],
+    observation: Observation | None = None,
+):
     """Shared core: returns ``(shaped, filtered)`` where ``filtered`` is
     the post-$filter pre-paging frame ($count's denominator) and
     ``shaped`` additionally has $orderby/$select/$skip/$top applied —
     the spec's evaluation order (filter before select, since the filter
-    may use unselected columns; paging last)."""
+    may use unselected columns; paging last). With an ``observation``,
+    ``shaped`` counts the rows that pass ``$filter`` as they flow into
+    the paging operators; ``filtered`` stays unobserved."""
     _check_supported(options)
     # $expand: no-op by construction — the flat model already
     # materializes nav properties as dot columns (module docstring)
     if flt := _opt(options, "$filter"):
         df = df.filter(parse_filter(flt, dict(df.dtypes)))
     filtered = df
+    if observation is not None:
+        df = df.observe(observation, F.count(F.lit(1)).alias("n"))
     if order := _opt(options, "$orderby"):
         cols = []
         for part in order.split(","):
@@ -446,6 +462,23 @@ def apply_odata_options(df: DataFrame, options: Mapping[str, str]) -> DataFrame:
     return shaped
 
 
+def _reads_every_row(probe: DataFrame) -> bool:
+    """Whether collecting ``probe`` consumes every row that reaches its
+    observed ``$filter`` output. It does when the executed plan is a
+    ``TakeOrderedAndProject`` over an input with no output ordering:
+    each partition's top-k then drains its whole partition. A
+    ``CollectLimit`` (unsorted ``$top``) stops after ``limit`` rows, and
+    over an input already ordered by the sort keys (``spark.range``)
+    Spark's top-k takes only each partition's head. The plan is the
+    probe's own ``QueryExecution``, so the ``collect()`` that follows
+    reuses it instead of planning again."""
+    plan = probe._jdf.queryExecution().executedPlan()
+    return (
+        plan.nodeName() == "TakeOrderedAndProject"
+        and plan.children().head().outputOrdering().isEmpty()
+    )
+
+
 def odata_response(
     df: DataFrame,
     options: Mapping[str, str] | None = None,
@@ -465,6 +498,15 @@ def odata_response(
     input into one partition). An unbounded response streams via
     ``toLocalIterator``, one partition in driver memory at a time, so
     serving a 100 TB table never holds more than the rows it emits.
+    With ``$count=true``, a bounded page whose executed plan is a
+    ``TakeOrderedAndProject`` over an unordered input (a sorted page
+    over a parquet scan, with or without ``$skip``) takes
+    ``@odata.count`` from an ``Observation`` on the post-``$filter``
+    frame, filled by that same ``collect()``: one Spark job in all.
+    Every other request runs ``count()`` on the filtered frame, because
+    its page may stop reading early: an unsorted ``$top``, an input
+    already ordered by the sort keys (Spark's top-k then takes only each
+    partition's head), and an unbounded response.
     ``base_url`` is only needed when paging (the nextLink must point
     somewhere). When the client sent its own ``$top``, the nextLink
     re-issues the REMAINING top (client cap minus rows already served)
@@ -474,18 +516,21 @@ def odata_response(
     options = options or {}
     out: dict = {"@odata.context": context}
 
-    shaped, filtered = _apply(df, options)
-    if (_opt(options, "$count") or "").lower() == "true":
-        # count AFTER filter, BEFORE paging, per spec; reuses the same
-        # compiled predicate via the shared _apply core
-        out["@odata.count"] = filtered.count()
-
     client_top = _opt(options, "$top")
+    bounded = page_size is not None or client_top is not None
+    want_count = (_opt(options, "$count") or "").lower() == "true"
+    seen = Observation() if want_count and bounded else None
+    shaped, filtered = _apply(df, options, seen)
     if page_size is not None:
         probe = shaped.limit(page_size + 1)
     else:
         probe = shaped
-    bounded = page_size is not None or client_top is not None
+    folded = seen is not None and _reads_every_row(probe)
+    if want_count and not folded:
+        # count AFTER filter, BEFORE paging, per spec; reuses the same
+        # compiled predicate via the shared _apply core. An observed
+        # probe's collect below still completes its (unread) observation.
+        out["@odata.count"] = filtered.count()
     cols = probe.columns
     rows = []
     truncated = False
@@ -494,6 +539,8 @@ def odata_response(
             truncated = True
             break
         rows.append({c: json_cell(v) for c, v in zip(cols, row)})
+    if folded:
+        out["@odata.count"] = seen.get["n"]
     out["value"] = rows
 
     remaining_top = None

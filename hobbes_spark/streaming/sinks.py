@@ -21,7 +21,8 @@ the package:
   batch by batch (the MinHash / HLL / count-min ingests in
   ``streaming/ingest.py``): parameters pinned in ``<store>/_meta`` and
   a refusal to rewind, checked once per query run, then one
-  :func:`write_batch` per store table.
+  :func:`write_batch` per store table and the batch id recorded in
+  ``<store>/_batches``.
 
 At 100 TB the same shape holds: each microbatch lands as one partition
 directory; a replayed batch atomically rewrites its own directory and
@@ -140,6 +141,10 @@ def quality_gated_writer(
     return write
 
 
+# the per-batch commit record of a store_writer store
+_BATCHES = "_batches"
+
+
 def store_writer(
     store_dir: str,
     params: Mapping[str, object],
@@ -153,22 +158,29 @@ def store_writer(
     the lifetime of the query, so re-reading ``_meta`` and the
     partition listing per microbatch would be pure overhead) it pins
     ``params`` in ``<store>/_meta`` (:func:`_check_store_meta`) and
-    refuses a batch id that would rewind ``<store>/<guard_table>``
+    refuses a batch id that would rewind the store
     (:func:`_assert_batch_monotonic`). Then every batch, ``step(batch_df,
     batch_id)`` returns ``{table: df}`` and each ``df`` is written as
     that batch of ``<store>/<table>`` by :func:`write_batch`, in the
-    order given."""
+    order given; last, the batch id is recorded as an empty
+    ``<store>/_batches/_batch_id=<id>`` directory, so a batch that wrote
+    no rows (and so no partition) still moves the store's high-water
+    mark. ``guard_table`` keeps guarding stores written before that
+    record existed: its ``_batch_id`` partitions count toward the mark
+    too."""
     validated = False
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal validated
+        spark = batch_df.sparkSession
         if not validated:
-            spark = batch_df.sparkSession
             _check_store_meta(spark, store_dir, params)
             _assert_batch_monotonic(spark, store_dir, guard_table, batch_id)
             validated = True
         for table, df in step(batch_df, batch_id).items():
             write_batch(df, batch_id, f"{store_dir}/{table}")
+        p, fs = _hadoop_path(spark, f"{store_dir}/{_BATCHES}/_batch_id={batch_id}")
+        fs.mkdirs(p)
 
     return write
 
@@ -221,13 +233,14 @@ def _assert_batch_monotonic(
     existing store: its epoch counter restarted at 0, its
     ``_batch_id < N`` base reads would hide the whole existing corpus,
     and its dynamic overwrites would silently clobber old partitions —
-    permanent data loss with no error. Partition-column-only read (no
-    row data)."""
-    path = f"{store_dir}/{table}"
-    if not _path_exists(spark, path):
-        return
-    row = spark.read.parquet(path).agg(F.max("_batch_id").alias("m")).first()
-    max_seen = row["m"] if row else None
+    permanent data loss with no error. The max is taken over the
+    ``_batch_id=`` directories of ``<store>/_batches`` and
+    ``<store>/<table>``: two directory listings, no Spark job."""
+    seen = [
+        *_partition_batch_ids(spark, f"{store_dir}/{_BATCHES}"),
+        *_partition_batch_ids(spark, f"{store_dir}/{table}"),
+    ]
+    max_seen = max(seen, default=None)
     if max_seen is not None and batch_id < max_seen:
         raise ValueError(
             f"ingest store {store_dir!r} already holds batches up to "
@@ -237,6 +250,16 @@ def _assert_batch_monotonic(
             "the query at its original checkpoint, or start a fresh "
             "store directory."
         )
+
+
+def _partition_batch_ids(spark: SparkSession, path: str) -> list[int]:
+    """The ids of the ``_batch_id=<id>`` directories directly under
+    ``path``; empty when ``path`` does not exist."""
+    p, fs = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return []
+    names = (st.getPath().getName() for st in fs.listStatus(p) if st.isDirectory())
+    return [int(n.split("=", 1)[1]) for n in names if n.startswith("_batch_id=")]
 
 
 def _hadoop_path(spark: SparkSession, path: str):

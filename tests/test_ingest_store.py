@@ -6,6 +6,7 @@ only a missing path — read as an empty store."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -15,11 +16,11 @@ from hobbes_spark.streaming.ingest import (
     minhash_ingest_writer,
     read_signature_store,
 )
+from hobbes_spark.streaming.sinks import _assert_batch_monotonic
 
 
-# Batch ``b`` of each store carries new keys: a MinHash batch whose ids
-# are all in the store already writes no signature partition
-# (first-write-wins), so it would not advance the store's batch max.
+# Batch ``b`` of each store carries new keys; the rewind tests below
+# also feed batches that write no rows.
 def _docs(spark, b):
     return spark.createDataFrame(
         [(i, f"doc number {i} with shared words here today")
@@ -92,6 +93,47 @@ def test_store_refuses_fresh_checkpoint_rewind(spark, tmp_path, kind):
     w(batch(spark, 1), 1)
     with pytest.raises(ValueError, match="NEW checkpoint"):
         make(store)(batch(spark, 0), 0)
+
+
+@pytest.mark.parametrize("batch1", ["same_as_batch_0", "empty"])
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_store_refuses_rewind_past_a_batch_without_rows(
+    spark, tmp_path, kind, batch1
+):
+    """A batch that writes no partition still counts: a MinHash batch
+    whose docs are all stored already (first write wins) or an empty
+    microbatch in any store. A new query at batch 0 must be refused,
+    not overwrite batch 0's partitions."""
+    make, _, batch, _ = STORES[kind]
+    store = str(tmp_path / "store")
+    w = make(store)
+    first = batch(spark, 0)
+    w(first, 0)
+    w(first if batch1 == "same_as_batch_0" else first.limit(0), 1)
+    with pytest.raises(ValueError, match="NEW checkpoint"):
+        make(store)(batch(spark, 0), 0)
+
+
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_store_without_batch_record_is_guarded_by_its_guard_table(
+    spark, tmp_path, spark_jobs, kind
+):
+    """A store written before ``_batches`` existed keeps its guard: the
+    guard table's ``_batch_id`` partitions set the mark, read by
+    listing directories, without a Spark job."""
+    make, _, batch, _ = STORES[kind]
+    store = tmp_path / "store"
+    w = make(str(store))
+    w(batch(spark, 0), 0)
+    w(batch(spark, 1), 1)
+    shutil.rmtree(store / "_batches")
+    guard = {"minhash": "signatures", "hll": "sketches", "cms": "cells"}[kind]
+    _, jobs, _ = spark_jobs(
+        lambda: _assert_batch_monotonic(spark, str(store), guard, 1)
+    )
+    assert jobs == 0
+    with pytest.raises(ValueError, match="NEW checkpoint"):
+        make(str(store))(batch(spark, 0), 0)
 
 
 @pytest.mark.parametrize("kind", sorted(STORES))

@@ -10,7 +10,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from hobbes_spark.pipeline import Pipeline
+from hobbes_spark.pipeline import Pipeline, read_parquet_any_ts
 from hobbes_spark.sources.odata_serve import (
     apply_odata_options,
     odata_response,
@@ -263,6 +263,84 @@ def test_top_page_equals_unbounded_slice(orders):
             orders, {**options, "$skip": str(skip), "$top": str(top)}
         )["value"]
         assert page == everything[skip:skip + top]
+
+
+@pytest.fixture(scope="module")
+def four_files(spark, tmp_path_factory):
+    """A 2000-row parquet frame in four files; its scan has no output
+    ordering. Read once so later reads reuse the schema (no job)."""
+    path = str(tmp_path_factory.mktemp("odata") / "t")
+    spark.range(0, 2000, 1, 4).select(
+        "id", (F.col("id") % 13).alias("m")
+    ).write.parquet(path)
+    read_parquet_any_ts(spark, path)
+    return read_parquet_any_ts(spark, path)
+
+
+def test_sorted_count_page_is_one_job(spark, four_files, spark_jobs):
+    """A sorted ``$count`` page takes its count from the page's own
+    scan: one job, one stage, and no exchange in the executed plan."""
+    options = {
+        "$filter": "id gt 100",
+        "$orderby": "m desc,id",
+        "$top": "5",
+        "$count": "true",
+    }
+    resp, jobs, stages = spark_jobs(lambda: odata_response(four_files, options))
+    assert (jobs, stages) == (1, 1)
+    assert resp["@odata.count"] == 1899
+    assert list(resp) == ["@odata.context", "@odata.count", "value"]
+    assert [r["id"] for r in resp["value"]] == [103, 116, 129, 142, 155]
+    status = spark._jsparkSession.sharedState().statusStore()
+    plan = status.executionsList().last().physicalPlanDescription()
+    assert "CollectMetrics" in plan and "TakeOrderedAndProject" in plan
+    assert "Exchange" not in plan
+
+
+# case -> (request options without $count, server page_size)
+_COUNT_CASES = {
+    "sorted": ({"$filter": "m lt 5", "$orderby": "m,id", "$top": "7"}, None),
+    "sorted_skip": (
+        {"$filter": "m lt 5", "$orderby": "id desc", "$skip": "40", "$top": "7"},
+        None,
+    ),
+    "unsorted_top": ({"$filter": "m lt 5", "$top": "7"}, None),
+    "empty": ({"$filter": "id lt 0", "$orderby": "id", "$top": "7"}, None),
+    "skip_past_end": (
+        {"$filter": "m lt 5", "$orderby": "m,id", "$skip": "5000", "$top": "7"},
+        None,
+    ),
+    "page_size_next_link": ({"$filter": "m lt 5", "$orderby": "m,id"}, 10),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_COUNT_CASES))
+def test_count_equals_count_action(spark, four_files, case):
+    """``@odata.count`` is the post-``$filter``, pre-paging row count on
+    every request shape — also where the page stops reading early."""
+    options, page_size = _COUNT_CASES[case]
+    resp = odata_response(
+        four_files,
+        {**options, "$count": "true"},
+        base_url="https://svc/t",
+        page_size=page_size,
+    )
+    want = four_files.filter(parse_filter(options["$filter"])).count()
+    assert resp["@odata.count"] == want
+    assert list(resp)[:3] == ["@odata.context", "@odata.count", "value"]
+    assert ("@odata.nextLink" in resp) == (case == "page_size_next_link")
+
+
+def test_count_over_pre_ordered_input(spark):
+    """Over an input already ordered by the sort key (``spark.range``)
+    Spark's top-k reads only each partition's head, so the page alone
+    sees a few of the 20 filtered rows; the count must still be 20."""
+    df = spark.range(30)
+    resp = odata_response(
+        df, {"$filter": "id lt 20", "$orderby": "id", "$top": "3", "$count": "true"}
+    )
+    assert resp["@odata.count"] == df.filter("id < 20").count() == 20
+    assert [r["id"] for r in resp["value"]] == [0, 1, 2]
 
 
 def test_nested_cells_serve_as_json(spark):

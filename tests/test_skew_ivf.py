@@ -145,6 +145,31 @@ def test_ivf_index_persists_and_searches_identically(spark, sf_dir, tmp_path):
     assert stored == direct and len(stored) == 25
 
 
+def test_ivf_reopen_launches_no_job(spark, tmp_path, spark_jobs):
+    """Re-opening an unchanged index reuses the schemas of the first
+    read: no Spark job, the same schema and rows, and ``cell`` is still
+    a discovered partition column that prunes the scan."""
+    from hobbes_spark.functions.similarity import ivf_read, ivf_write
+
+    assigned = spark.createDataFrame(
+        [(i, [float(i), 1.0], i % 3) for i in range(12)],
+        "id bigint, v array<double>, cell int",
+    )
+    centroids = spark.createDataFrame(
+        [(c, [float(c), 1.0]) for c in range(3)], "cell int, centroid array<double>"
+    )
+    idx = str(tmp_path / "idx")
+    ivf_write(idx, assigned, centroids)
+    a1, c1 = ivf_read(spark, idx)
+    (a2, c2), jobs, _ = spark_jobs(lambda: ivf_read(spark, idx))
+    assert jobs == 0
+    assert (a2.schema, c2.schema) == (a1.schema, c1.schema)
+    assert sorted(a2.collect()) == sorted(a1.collect()) == sorted(assigned.collect())
+    assert sorted(c2.collect()) == sorted(c1.collect())
+    plan = a2.filter("cell = 1")._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(cell" in plan
+
+
 def test_ragged_corpus_dim_raises(spark):
     """A mixed-dimension corpus must fail fast: the Arrow sign kernel
     signs other-dim vectors all-zero, which would silently collapse the
