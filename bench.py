@@ -17,7 +17,11 @@ cross-round comparison):
   cross-round continuity; plus the worst offender) so a reader can
   tell noise from regression before comparing rounds;
 * every query gets the same $SPARK_GRAFT_BENCH_RUNS timed runs, and
-  its median ("queries_median") is reported next to the best-of.
+  its median ("queries_median") is reported next to the best-of;
+* the codegen classes each query compiles during its timed runs are
+  reported ("queries_compiles", expected 0): a query whose generated
+  code changes from one run to the next recompiles on every call, which
+  the warm run hides from the timings.
 
 Each query is fully materialized via write.format("noop") — forces
 every operator, no driver-side collect cost in the timing.
@@ -107,7 +111,7 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     from hobbes_spark.queries import QUERIES
-    from hobbes_spark.session import get_spark
+    from hobbes_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("hobbes_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -141,13 +145,16 @@ def main() -> None:
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         materialize(name)  # untimed warm run: one-time codegen/JIT
         samples = []
+        c0 = codegen_compiles(spark)
         for _ in range(runs):
             t0 = time.perf_counter()
             materialize(name)
             samples.append(time.perf_counter() - t0)
+        compiles[name] = codegen_compiles(spark) - c0
         best = min(samples)
         timings[name] = round(best, 3)
         medians[name] = round(statistics.median(samples), 3)
@@ -211,6 +218,7 @@ def main() -> None:
         "value_core_r1_ratio": round(core / _R1_CORE_RECORDED, 3),
         "queries": timings,
         "queries_median": medians,
+        "queries_compiles": compiles,
         "spread_pct": spreads,
         "worst_spread": worst,
         "delta_vs_prev_spread_units": delta_units,

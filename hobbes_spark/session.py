@@ -11,6 +11,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Generated classes Spark keeps compiled (`spark.sql.codegen.cache.maxEntries`,
+# default 100). One pass over the 23 bench queries compiles ~310 distinct
+# classes and one over the whole 257-query catalog ~2,770 (sf0.001 and
+# sf0.01); an LRU smaller than a cyclic working set never hits, so at the
+# default every pass over the bench queries recompiled ~340 classes.
+# 8192 is ~3x the catalog.
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def get_spark(
     app_name: str = "hobbes_spark",
@@ -21,9 +29,13 @@ def get_spark(
 
     Defaults honour the driver environment: ``SPARK_GRAFT_CPUS`` sets local
     parallelism (default: the host's core count), shuffle partitions
-    default to the same so a local run does not create thousands of tiny
-    tasks.  On a real cluster these would be set by the deployment (and
-    AQE coalesces shuffle partitions anyway).
+    default to ``max(cpus, 8)`` so a local run does not create thousands
+    of tiny tasks.  On a real cluster these would be set by the deployment
+    (and AQE coalesces shuffle partitions anyway).
+
+    Static confs (the codegen class cache) take effect only in the call
+    that starts the JVM; a session built before this one keeps Spark's
+    defaults.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     master = master or f"local[{cpus}]"
@@ -61,5 +73,19 @@ def get_spark(
         # (bench, the gate) see FIFO-identical behavior — fairness
         # only arbitrates when two pools hold runnable tasks.
         .config("spark.scheduler.mode", "FAIR")
+        # Static: read once, by the call that starts the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers codegen stages in the order its query stages
+        # finish, which varies run to run; with the stage id in the
+        # class name the same pipeline compiles again under a new name.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (driver
+    and, on ``local[N]``, task threads). A repeated query whose classes
+    are all cached leaves it unchanged."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

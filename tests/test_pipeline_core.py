@@ -699,3 +699,31 @@ def test_data_result_encodes_nested_and_decimal(spark):
         1, ["2020-01-02"], 1.5, "0102",
         {"d": "2020-01-02", "n": 5}, [{"d": "2020-01-02", "n": 6}],
     ]
+
+
+def test_repeated_query_mix_compiles_no_class(spark, sf_dir):
+    """A second pass over a mix of bench queries compiles no generated
+    class. The mix uses ~180 classes; with Spark's default class cache
+    of 100 entries the LRU evicted them before their next use, and every
+    later pass recompiled ~166 of them."""
+    from hobbes_spark.queries import QUERIES
+    from hobbes_spark.session import CODEGEN_CACHE_ENTRIES, codegen_compiles
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    mix = [
+        "prepare_corpus", "bm25_topk", "curate_corpus", "moving_mean",
+        "cosine_topk", "decontaminate_docs", "moving_partitioned",
+    ]
+
+    def run_mix():
+        before = codegen_compiles(spark)
+        for name in mix:
+            QUERIES[name].spark(spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return codegen_compiles(spark) - before
+
+    run_mix()
+    assert run_mix() == 0

@@ -4,8 +4,9 @@ Usage: python tools/time_isolated.py <query> [query ...]
 
 Times QUERIES[name].spark(spark, $SPARK_GRAFT_SF_DIR) construction +
 noop-sink execution, best of $RUNS (default 3) after one warm-up, on
-the bench session factory. Prints one line per query:
-    <name> best=<s> runs=[...]
+the bench session factory. Prints one line per query, with the codegen
+classes each timed run compiled (0 once the query's classes are cached):
+    <name> best=<s> runs=[...] compiles=[...]
 """
 
 import os
@@ -21,21 +22,26 @@ def main() -> None:
     runs = int(os.environ.get("RUNS", "3"))
 
     from hobbes_spark.queries import QUERIES
-    from hobbes_spark.session import get_spark
+    from hobbes_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("hobbes_spark_isolated")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         spark.sparkContext.setJobDescription(f"isolated:{name}")
-        samples = []
+        samples, compiles = [], []
         for i in range(runs + 1):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = QUERIES[name].spark(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             if i:  # drop the warm-up
                 samples.append(round(dt, 3))
-        print(f"\n{name} best={min(samples)} runs={samples}", flush=True)
+                compiles.append(codegen_compiles(spark) - c0)
+        print(
+            f"\n{name} best={min(samples)} runs={samples} compiles={compiles}",
+            flush=True,
+        )
     spark.stop()
 
 
