@@ -13,7 +13,7 @@ re-expresses the same semantics Spark-first:
   ``int``, ``format date``, ``contains``, ``missing`` …) as Column builders.
 * ``operators`` — windowed series (``moving``/``expanding``), dataset
   combinators (``merge``/``join``), as-of and range joins, skew-salted
-  aggregation, ML ops (``buckets``, ``k-means``,
+  joins, ML ops (``buckets``, ``k-means``,
   ``linear regression/extrapolation``, ``each``).
 * ``sources`` / ``sinks`` — ingestion (JSON dot-path flattening, type
   sniffing, inline tables) and the uniform ``DataResult`` wire format.

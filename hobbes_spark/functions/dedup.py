@@ -30,7 +30,6 @@ __all__ = [
     "remove_substring_spans",
     "word_shingles",
     "char_ngrams",
-    "minhash_signature",
     "minhash_signatures_df",
     "banded_signatures",
     "minhash_pairs",
@@ -329,37 +328,10 @@ def char_ngrams(col: Column | str, n: int = 3) -> Column:
 
 
 def _shingle_hash(x: Column, seed: int, hash_fn: str) -> Column:
-    if hash_fn == "xxhash64":
-        # hash the string ONCE, then derive per-seed values by rehashing
-        # the 64-bit fingerprint: same agg quality, but the per-seed work
-        # is an 8-byte hash instead of a string hash, and the codegen for
-        # num_hashes aggregates compiles ~3x faster (measured at sf0.1)
-        return F.xxhash64(F.lit(seed), F.xxhash64(x))
     if hash_fn == "md5":
         # byte-identical in DuckDB: md5('<seed>|' || shingle), min over hex strings
         return F.md5(F.concat(F.lit(f"{seed}|"), x))
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
-def minhash_signature(
-    col: Column | str, num_hashes: int = 16, hash_fn: str = "xxhash64", k: int = 3
-) -> Column:
-    """MinHash signature: for each seed, the min hash over word shingles.
-    Empty-shingle docs get NULL (can't estimate similarity).
-
-    NOT interchangeable with :func:`minhash_signatures_df` on the
-    ``xxhash64`` path even at identical ``(num_hashes, hash_fn, k)``:
-    this column form hashes the joined SHINGLE STRING, while the df form
-    chains per-TOKEN hashes (the no-string-building scale path) — the
-    same document gets different signature values. Never mix the two
-    builders across :func:`minhash_pairs_from_signatures` /
-    :func:`minhash_incremental_pairs` inputs; pick one per corpus."""
-    def min_for_seed(sh: Column, seed: int) -> Column:
-        return F.array_min(F.transform(sh, lambda x: _shingle_hash(x, seed, hash_fn)))
-
-    sh = word_shingles(col, k)
-    sig = F.array(*[min_for_seed(sh, s) for s in range(num_hashes)])
-    return F.when(F.size(sh) > 0, sig)
 
 
 def minhash_signatures_df(
@@ -455,9 +427,7 @@ def minhash_pairs_from_signatures(
     or a parquet checkpoint shared with an external engine (which is how
     the xxhash64 path gets an end-to-end DuckDB oracle despite DuckDB
     lacking xxhash64) — as long as every signature in ONE call came from
-    the SAME builder with the same ``(num_hashes, hash_fn, k)``
-    (:func:`minhash_signature` and :func:`minhash_signatures_df` are not
-    cross-compatible — see the column form's docstring). ``sigs`` should
+    the same ``(num_hashes, hash_fn, k)``. ``sigs`` should
     already be materialized (localCheckpoint / parquet): it has three
     consumers here."""
     banded = banded_signatures(sigs, num_hashes, bands)

@@ -1,18 +1,22 @@
-"""Skew handling: salted two-phase aggregation and salted joins.
+"""Skew handling for hot-key equi-joins.
 
 At 100 TB a handful of hot keys (one language, one event type, one
-empty-string id) can pin an entire stage on one task. AQE's skew-join
-splitting handles sort-merge *joins*; these helpers cover the two cases
-it does not:
+empty-string id) can pin a join stage on one task. AQE's skew-join
+splitting handles sort-merge joins above its byte thresholds; these
+helpers cover the rest:
 
-* :func:`salted_agg` — hot-key ``groupBy``: pre-aggregate on
-  ``(key, salt)`` so every partial fits a task, then combine per key.
-  Doubles the shuffle count but each shuffle is balanced; for algebraic
-  reductions the result is exactly equal to the direct ``groupBy``.
 * :func:`salted_join` — hot-key equi-join where the dimension side is
   too big to broadcast: replicate the dimension ``salts`` times, give
   each fact row a random salt, join on ``(key, salt)`` — every hot key
   spreads over ``salts`` tasks.
+* :func:`auto_salted_join` — the same with the salt factor derived from
+  the measured join price (:func:`join_cardinality_stats`).
+
+A hot-key *aggregation* needs none of this: Spark splits every
+algebraic reduction (sum, count, min, max, avg) into a map-side
+``partial_*`` aggregate and a final one around the exchange, so a hot
+key sends at most one partial row per map task into the shuffle. A
+plain ``groupBy().agg()`` is the whole plan.
 
 Salts are deterministic given ``seed`` (``F.rand(seed)``), so runs are
 reproducible.
@@ -20,82 +24,17 @@ reproducible.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hobbes_spark.expressions import c
 
 __all__ = [
-    "salted_agg",
     "salted_join",
     "auto_salt_factor",
     "auto_salted_join",
-    "auto_agg_salt_factor",
-    "auto_salted_agg",
     "join_cardinality_stats",
 ]
-
-#: reduction -> (per-salt partial, per-key combine) — algebraic pairs
-#: whose two-phase composition equals the direct aggregation
-_ALGEBRAIC: dict[str, tuple] = {
-    "sum": (F.sum, F.sum),
-    "count": (F.count, F.sum),
-    "min": (F.min, F.min),
-    "max": (F.max, F.max),
-}
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    values: dict[str, str],
-    salts: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """Two-phase salted aggregation: ``values`` maps column -> reduction
-    (sum/count/min/max; mean decomposes to sum+count automatically).
-
-    Exactly equivalent to ``df.groupBy(keys).agg(...)`` — verified
-    against it in tests — but no task ever holds more than ~1/salts of a
-    hot key's rows.
-    """
-    means = [col for col, r in values.items() if r == "mean"]
-    plain = {col: r for col, r in values.items() if r != "mean"}
-    for col in means:
-        plain[col] = "sum"
-
-    partials: list[Column] = []
-    combines: list[Column] = []
-    # ordinal intermediate aliases (__p_0, not __p_<name>): a value
-    # column whose NAME contains a dot would otherwise re-enter F.col as
-    # struct-field access and fail resolution — the flat model produces
-    # such names by design
-    ordinal = {col: i for i, col in enumerate(values)}
-    for col, red in plain.items():
-        if red not in _ALGEBRAIC:
-            raise ValueError(f"non-algebraic reduction {red!r}; use groupBy directly")
-        part, comb = _ALGEBRAIC[red]
-        partials.append(part(c(col)).alias(f"__p_{ordinal[col]}"))
-        combines.append(comb(F.col(f"__p_{ordinal[col]}")).alias(col))
-    for col in means:
-        # mean = sum / NON-NULL count, per column (avg semantics)
-        partials.append(F.count(c(col)).alias(f"__pn_{ordinal[col]}"))
-        combines.append(F.sum(F.col(f"__pn_{ordinal[col]}")).alias(f"__n_{ordinal[col]}"))
-
-    salt = F.floor(F.rand(seed) * salts).cast("int")
-    stage1 = (
-        df.withColumn("__salt", salt)
-        .groupBy(*[c(k) for k in keys], F.col("__salt"))
-        .agg(*partials)
-    )
-    out = stage1.groupBy(*[c(k) for k in keys]).agg(*combines)
-    for col in means:
-        out = out.withColumn(
-            col, c(col) / F.nullif(F.col(f"__n_{ordinal[col]}"), F.lit(0))
-        ).drop(f"__n_{ordinal[col]}")
-    return out
 
 
 def _check_salted_join_contract(fact, dim, on: str, how: str) -> None:
@@ -142,71 +81,6 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salts)]))
     )
     return f.join(d, on=[on, "__salt"], how=how).drop("__salt")
-
-
-def auto_agg_salt_factor(
-    df: DataFrame,
-    keys: Sequence[str],
-    target_rows_per_task: int = 5_000_000,
-    max_salts: int = 256,
-) -> int:
-    """:func:`auto_salt_factor`'s aggregation twin (round 9): the task
-    load of an unsalted ``groupBy`` is the hottest key's INPUT row
-    count, so
-
-        salts = ceil(max_key_rows / target_rows_per_task)
-
-    clamped to ``[1, max_salts]``.  1 means the hot key already fits a
-    task — :func:`auto_salted_agg` then runs the direct single-phase
-    ``groupBy``, skipping the extra shuffle two-phase salting costs.
-    The measurement is one map-side-combined keyed count + a 1-row max
-    (key-cardinality-sized, never corpus-sized on the driver) and is
-    deterministic — retried planning produces the same factor."""
-    if target_rows_per_task < 1:
-        raise ValueError(
-            f"auto_agg_salt_factor: target_rows_per_task must be >= 1, "
-            f"got {target_rows_per_task}"
-        )
-    top = (
-        df.groupBy(*[c(k) for k in keys])
-        .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-        .agg(F.coalesce(F.max("__n"), F.lit(0)).alias("__max"))
-        .collect()
-    )
-    max_rows = int(top[0]["__max"]) if top else 0
-    salts = -(-max_rows // target_rows_per_task)  # ceil div
-    return int(max(1, min(salts, max_salts)))
-
-
-def auto_salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    values: dict[str, str],
-    target_rows_per_task: int = 5_000_000,
-    max_salts: int = 256,
-    seed: int = 42,
-) -> DataFrame:
-    """:func:`salted_agg` with the salt factor derived by
-    :func:`auto_agg_salt_factor`; a factor of 1 falls back to the
-    direct single-shuffle ``groupBy`` with identical output columns
-    (same reduction validation either way)."""
-    salts = auto_agg_salt_factor(df, keys, target_rows_per_task, max_salts)
-    if salts > 1:
-        return salted_agg(df, keys, values, salts=salts, seed=seed)
-    # run the same validation/decomposition as the salted path, with
-    # ONE phase: salts=1 in salted_agg would add a useless second
-    # shuffle, so build the direct agg from the same reduction table
-    aggs: list[Column] = []
-    for col, red in values.items():
-        if red == "mean":
-            aggs.append(F.avg(c(col)).alias(col))
-        elif red in _ALGEBRAIC:
-            aggs.append(_ALGEBRAIC[red][0](c(col)).alias(col))
-        else:
-            raise ValueError(
-                f"non-algebraic reduction {red!r}; use groupBy directly"
-            )
-    return df.groupBy(*[c(k) for k in keys]).agg(*aggs)
 
 
 def auto_salt_factor(

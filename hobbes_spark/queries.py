@@ -2194,7 +2194,7 @@ def tpch_q18_big_orders(spark, sf_dir):
 
 
 # --------------------------------------------------------------------- #
-# IVF ANN (scale path beside LSH) and skew-salted aggregation.
+# IVF ANN (scale path beside LSH) and hot-key aggregation.
 # --------------------------------------------------------------------- #
 
 @q("ann_ivf_topk", _cosine_sql())  # nprobe=nlist probes every cell -> exact
@@ -3123,66 +3123,15 @@ def embedding_neardup_lsh_q(spark, sf_dir):
     bench=True,
 )
 def salted_group_sum(spark, sf_dir):
-    # hot-key-safe two-phase aggregation; result identical to the direct
-    # groupBy (the oracle IS the direct groupBy).  ONE salted pass
-    # computes both reductions — a lit(1) column carries COUNT(*) so
-    # sum and count share the two shuffles instead of running a second
-    # full pass plus a join (r12 verdict item 2: the old double-pass
-    # body was 4 shuffles + a join for the same answer).
-    from hobbes_spark.operators.skew import salted_agg
-
-    ev = (
-        _t(spark, sf_dir, "events").df
-        .select("event_type", "value")
-        .withColumn("__one", F.lit(1))
-    )
-    out = salted_agg(
-        ev, ["event_type"], {"value": "sum", "__one": "count"}, salts=16
-    )
-    return out.select(
-        "event_type",
-        F.col("__one").cast("bigint").alias("n"),
-        _r(F.col("value"), 4).alias("total"),
-    )
-
-
-@q(
-    "auto_salted_group_sum",
-    f"""
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           {_rsql('SUM(value)', 4)} AS total
-    FROM events GROUP BY 1
-    """,
-)
-def auto_salted_group_sum(spark, sf_dir):
-    """DERIVED-salt twin of `salted_group_sum` (rounding out r8
-    verdict item 5 to aggregations): the factor comes from the measured
-    hottest-key INPUT rows over a target task size
-    (operators/skew.auto_agg_salt_factor) instead of a constant. The
-    tiny target here (500 rows/task) forces the two-phase salted path
-    at gate scale; the oracle is the direct groupBy — the same
-    partitioning-only invariant as the fixed-salt twin. At a 100 TB
-    default target (5M rows/task) a balanced key set derives factor 1
-    and keeps the single-shuffle plan."""
-    from hobbes_spark.operators.skew import auto_salted_agg
-
-    ev = (
-        _t(spark, sf_dir, "events").df
-        .select("event_type", "value")
-        .withColumn("__one", F.lit(1))
-    )
-    out = auto_salted_agg(
-        ev,
-        ["event_type"],
-        {"value": "sum", "__one": "count"},
-        target_rows_per_task=500,
-    )
-    return out.select(
-        "event_type",
-        F.col("__one").cast("bigint").alias("n"),
-        _r(F.col("value"), 4).alias("total"),
-    )
+    """Hot-key-safe aggregation with no salt: Spark runs `partial_sum`
+    and `partial_count` map-side, so however many rows one `event_type`
+    holds, each map task sends at most one row per key into the one
+    shuffle. Salting would only add a second shuffle for the same
+    result. The name stays because the benchmarks freeze it."""
+    return _t(spark, sf_dir, "events").group_by("event_type").agg(
+        n=F.count(F.lit(1)).cast("bigint"),
+        total=_r(F.sum("value"), 4),
+    ).df
 
 
 @q(

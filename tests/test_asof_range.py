@@ -206,9 +206,9 @@ def test_salted_join_rejects_overlapping_columns(spark):
         salted_join(fact, dim, on="k")
 
 
-def test_salted_agg_dot_path_value_columns(spark):
-    from hobbes_spark.operators.skew import salted_agg
+def test_group_reduce_dot_path_value_columns(spark):
+    from hobbes_spark.pipeline import Pipeline
 
     df = spark.createDataFrame([("a", 1.0), ("a", 3.0)], ["k", "m.v"])
-    out = salted_agg(df, ["k"], {"m.v": "mean"}).collect()
+    out = Pipeline(df).group_by("k").reduce("mean").collect()
     assert out[0]["m.v"] == 2.0

@@ -56,6 +56,18 @@ def test_group_agg_is_partial(spark, sf_dir):
     assert "partial_sum" in plan
 
 
+def test_hot_key_agg_one_shuffle_over_partials(spark, sf_dir):
+    """salted_group_sum is a direct groupBy: one shuffle exchange, with
+    the map-side partial_sum and partial_count below it. The partials
+    are what keep a hot key from sending all its rows to one task."""
+    plan = plan_of(spark, sf_dir, "salted_group_sum")
+    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+    assert shuffles == 1, f"expected 1 shuffle exchange, plan has {shuffles}"
+    above, below = plan.split("Exchange hashpartitioning")
+    assert "partial_sum" in below and "partial_count" in below
+    assert "partial_" not in above
+
+
 def test_partitioned_window_keeps_keyed_shuffle(spark, sf_dir):
     """moving over raw events uses a keyed window — the shuffle is
     hash-partitioned by the key, never a single global sort."""

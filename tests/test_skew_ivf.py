@@ -1,5 +1,5 @@
-"""Skew helpers and IVF ANN: exact equivalence for salted ops, recall
-floor for the IVF index.
+"""Skew and IVF ANN: exact equivalence for salted joins, map-side
+combining for hot-key aggregations, recall floor for the IVF index.
 """
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hobbes_spark.functions.similarity import cosine_topk, ivf_topk
-from hobbes_spark.operators.skew import salted_agg, salted_join
+from hobbes_spark.operators.skew import salted_join
 
 
 @pytest.fixture(scope="module")
@@ -24,43 +24,35 @@ def skewed(spark):
     return hot.unionByName(tail)
 
 
-def test_salted_agg_equals_direct(spark, skewed):
-    got = salted_agg(
-        skewed, ["k"], {"v": "sum"}, salts=8
-    ).withColumnRenamed("v", "s")
-    want = skewed.groupBy("k").agg(F.sum("v").alias("s"))
-    g = {r["k"]: r["s"] for r in got.collect()}
-    w = {r["k"]: r["s"] for r in want.collect()}
-    assert g.keys() == w.keys()
-    assert all(abs(g[k] - w[k]) < 1e-6 for k in w)
+def _shuffle_exchanges(plan):
+    """Every ShuffleExchangeExec of a physical plan, looking through
+    AQE's query stages and shuffle reads."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _shuffle_exchanges(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _shuffle_exchanges(plan.plan())
+    found = [plan] if name == "ShuffleExchangeExec" else []
+    children = plan.children()
+    for i in range(children.size()):
+        found += _shuffle_exchanges(children.apply(i))
+    return found
 
 
-def test_salted_agg_mean_and_count(spark, skewed):
-    got = salted_agg(skewed, ["k"], {"v": "mean"}, salts=8)
-    want = {r["k"]: r["m"] for r in skewed.groupBy("k").agg(F.avg("v").alias("m")).collect()}
-    for r in got.collect():
-        assert abs(r["v"] - want[r["k"]]) < 1e-9
-
-    got2 = salted_agg(skewed, ["k"], {"v": "count"}, salts=8)
-    want2 = {r["k"]: r["n"] for r in skewed.groupBy("k").agg(F.count("v").alias("n")).collect()}
-    assert {r["k"]: r["v"] for r in got2.collect()} == want2
-
-
-def test_salted_agg_rejects_nonalgebraic(skewed):
-    with pytest.raises(ValueError, match="non-algebraic"):
-        salted_agg(skewed, ["k"], {"v": "median"})
-
-
-def test_salted_agg_balances_partitions(spark, skewed):
-    """The stage-1 shuffle must spread the hot key over the salt space."""
-    stage1 = (
-        skewed.withColumn("__salt", F.floor(F.rand(42) * 8).cast("int"))
-        .groupBy("k", "__salt")
-        .count()
+def test_hot_key_agg_shuffles_partials_not_rows(spark, skewed):
+    """A direct groupBy splits a hot key by itself: the partial
+    aggregates run map-side, so the exchange writes at most one row per
+    key per map task, far below the 9,000 rows HOT holds."""
+    agg = skewed.groupBy("k").agg(
+        F.sum("v").alias("s"), F.count("v").alias("n"), F.avg("v").alias("a"),
+        F.min("v").alias("lo"), F.max("v").alias("hi"),
     )
-    hot = stage1.filter(F.col("k") == "HOT").collect()
-    assert len(hot) == 8  # all 8 salt cells occupied
-    assert max(r["count"] for r in hot) < 9000 * 0.25  # no cell holds the key
+    rows = {r["k"]: r for r in agg.collect()}
+    assert rows["HOT"]["n"] == 9000 and len(rows) == 51
+    (exchange,) = _shuffle_exchanges(agg._jdf.queryExecution().executedPlan())
+    written = exchange.metrics().apply("shuffleRecordsWritten").value()
+    map_tasks = skewed.rdd.getNumPartitions()
+    assert 0 < written <= map_tasks * len(rows) < 9000, (written, map_tasks)
 
 
 def test_salted_join_equals_direct(spark, skewed):
@@ -98,16 +90,6 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     full = ivf_topk(emb, queries, k=5, nlist=8, nprobe=8)
     f = {(r["query_id"], r["neighbor_id"]) for r in full.collect()}
     assert f == e
-
-
-def test_salted_mean_ignores_nulls(spark):
-    """mean must divide by the NON-null count per column (avg semantics),
-    not the group row count."""
-    df = spark.createDataFrame(
-        [("k", 2.0), ("k", None), ("k", 4.0)], "k string, v double"
-    )
-    got = salted_agg(df, ["k"], {"v": "mean"}, salts=4).collect()[0]["v"]
-    assert abs(got - 3.0) < 1e-9
 
 
 def test_salted_join_rejects_full(spark, skewed):
@@ -704,42 +686,3 @@ def test_auto_salted_join_contract_checks_before_pricing(spark, skewed):
         auto_salted_join(skewed, dim_ok, "k", how="full")
 
 
-def test_auto_agg_salt_factor_formula(spark, skewed):
-    """ceil(hottest key's input rows / target), clamped: HOT carries
-    9000 rows."""
-    from hobbes_spark.operators.skew import auto_agg_salt_factor
-
-    assert auto_agg_salt_factor(skewed, ["k"], target_rows_per_task=9000) == 1
-    assert auto_agg_salt_factor(skewed, ["k"], target_rows_per_task=4000) == 3
-    assert auto_agg_salt_factor(
-        skewed, ["k"], target_rows_per_task=1, max_salts=8
-    ) == 8
-    with pytest.raises(ValueError, match="target_rows_per_task"):
-        auto_agg_salt_factor(skewed, ["k"], target_rows_per_task=0)
-
-
-def test_auto_salted_agg_equals_direct(spark, skewed):
-    """Derived-salt aggregation == fixed-salt == direct groupBy, on
-    both the salted path (small target) and the factor-1 fallback
-    (huge target), for sum/count/min/max/mean."""
-    from hobbes_spark.operators.skew import auto_salted_agg
-
-    vals = {"v": "mean"}
-
-    def snap(df):
-        return sorted(
-            (r["k"], round(r["v"], 9)) for r in df.collect()
-        )
-
-    direct = snap(skewed.groupBy("k").agg(F.avg("v").alias("v")))
-    fixed = snap(salted_agg(skewed, ["k"], vals, salts=8))
-    derived = snap(auto_salted_agg(skewed, ["k"], vals, target_rows_per_task=2000))
-    fallback = snap(auto_salted_agg(skewed, ["k"], vals, target_rows_per_task=10**9))
-    assert direct == fixed == derived == fallback
-    # non-algebraic rejected on BOTH paths
-    with pytest.raises(ValueError, match="non-algebraic"):
-        auto_salted_agg(skewed, ["k"], {"v": "median"},
-                        target_rows_per_task=10**9)
-    with pytest.raises(ValueError, match="non-algebraic"):
-        auto_salted_agg(skewed, ["k"], {"v": "median"},
-                        target_rows_per_task=1)
