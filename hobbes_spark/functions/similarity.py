@@ -738,7 +738,8 @@ def pq_codebooks(
     driver-scalar precedent. Entries are rounded half-up to ``dp``
     decimals with the IEEE-exact ``floor(x·10^dp + 0.5)/10^dp`` so an
     external engine reproduces the codebook bit-for-bit and every
-    downstream code/distance agrees (the ``kmeans_lloyd`` recipe)."""
+    downstream code/distance agrees (the centre rounding of
+    ``operators.ml.kmeans``)."""
     if levels < 2:
         raise ValueError(f"pq_codebooks: levels must be >= 2, got {levels}")
     from hobbes_spark.operators.ml import _round_half_up

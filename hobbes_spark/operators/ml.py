@@ -2,7 +2,9 @@
 ``linear regression``, ``linear extrapolation``.
 
 The reference backs these with Accord.MachineLearning inside hobbes.core
-(`paket.dependencies:13`); here they are MLlib + plain DataFrame algebra.
+(`paket.dependencies:13`); here they are plain DataFrame algebra, with
+k-means as a deterministic Lloyd's whose centres are the only values
+that reach the driver.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from pyspark.sql import functions as F
 from hobbes_spark.expressions import c
 from hobbes_spark.reductions import NUMERIC_ONLY, numeric_columns, reduction_fn
 
-__all__ = ["buckets", "kmeans", "kmeans_lloyd", "each", "linear_regression", "linear_extrapolation"]
+__all__ = ["buckets", "kmeans", "each", "linear_regression", "linear_extrapolation"]
 
 
 def _agg_numeric(df, group_col: str, reduction: str):
@@ -52,38 +54,6 @@ def buckets(pipeline, n: int, reduction: str):
     )
 
 
-def kmeans(pipeline, k: int, reduction: str, seed: int = 42):
-    """``k-means n -> R`` — cluster rows on their numeric columns, reduce
-    each cluster to representative scalars (snippets:93-99).
-
-    MLlib KMeans over a VectorAssembler of the numeric columns; rows with
-    NULLs in any feature are skipped (Accord would throw). Cluster ids
-    are renumbered by ascending cluster mean so output is stable across
-    nondeterministic MLlib init orderings.
-    """
-    from pyspark.ml.clustering import KMeans as MLKMeans
-    from pyspark.ml.feature import VectorAssembler
-
-    df = pipeline.df
-    nums = numeric_columns(df)
-    if not nums:
-        raise ValueError("k-means needs at least one numeric column")
-    clean = df.dropna(subset=nums)
-    vec = VectorAssembler(inputCols=nums, outputCol="__features").transform(clean)
-    model = MLKMeans(k=k, seed=seed, featuresCol="__features", predictionCol="__cluster").fit(vec)
-    pred = model.transform(vec).drop("__features")
-    # stable renumbering: order clusters by their centroid's first coordinate
-    order = sorted(range(k), key=lambda i: tuple(model.clusterCenters()[i]))
-    mapping = F.create_map(
-        *[F.lit(x) for pair in ((old, new) for new, old in enumerate(order)) for x in pair]
-    )
-    pred = pred.withColumn("cluster", mapping[F.col("__cluster")]).drop("__cluster")
-    out = _agg_numeric(pred, "cluster", reduction)
-    return pipeline._step(
-        out.orderBy("cluster"), key_cols=("cluster",), order=(("cluster", True),)
-    )
-
-
 def _round_half_up(x, dp: int):
     """floor(x*10^dp + 0.5)/10^dp — every step an IEEE-exact double op,
     so Spark, DuckDB, and Python agree bit-for-bit (matches queries._r)."""
@@ -95,31 +65,30 @@ def _round_half_up(x, dp: int):
     return F.floor(x * f + F.lit(0.5)) / F.lit(f)
 
 
-def kmeans_lloyd(
-    pipeline,
-    k: int,
-    reduction: str,
-    iters: int = 8,
-    center_dp: int = 2,
-):
-    """``k-means n -> R`` on a DETERMINISTIC fixed-iteration Lloyd's:
-    bit-reproducible across engines, which makes the clustering
-    oracle-checkable (the MLlib path in :func:`kmeans` keeps k-means||
-    random init and is faster to converge, but no external engine can
-    replay it).
+# fixed iteration count and per-iteration centre rounding of ``kmeans``
+_KMEANS_ITERS = 8
+_KMEANS_CENTER_DP = 2
+
+
+def kmeans(pipeline, k: int, reduction: str):
+    """``k-means n -> R`` — cluster rows on their numeric columns, reduce
+    each cluster to representative scalars (snippets:93-99), on a
+    DETERMINISTIC fixed-iteration Lloyd's: bit-reproducible across
+    engines and across row layouts, which makes the clustering
+    oracle-checkable.
 
     Determinism recipe (mirrored exactly by the generated DuckDB oracle
-    in queries._kmeans_lloyd_sql):
+    in queries._kmeans_sql):
 
     * init: per-dimension LINEAR spacing, ``lo + (hi-lo)*(2i+1)/(2k)``
       — exact from min/max, no quantile or RNG semantics to match;
     * assignment: squared euclidean distance to each center, ties to
       the LOWEST cluster index (explicit first-match CASE chain);
-    * update: per-dimension mean, rounded half-up to ``center_dp``
+    * update: per-dimension mean, rounded half-up to ``_KMEANS_CENTER_DP``
       decimals each iteration — the rounding absorbs the summation-order
       FP noise between engines, so both iterate over IDENTICAL centers;
     * empty cluster: keeps its previous center;
-    * stop: exactly ``iters`` iterations (not to-convergence — a
+    * stop: exactly ``_KMEANS_ITERS`` iterations (not to-convergence — a
       convergence test would make parity depend on the noise the
       rounding suppresses).
 
@@ -138,7 +107,7 @@ def kmeans_lloyd(
     # _round_half_up mid-iteration with an opaque ValueError
     for col in nums:
         clean = clean.filter(~F.isnan(F.col(col)))
-    clean = clean.localCheckpoint(eager=True)  # iters+2 consumers
+    clean = clean.localCheckpoint(eager=True)  # _KMEANS_ITERS+2 consumers
     bounds = clean.agg(
         *[F.min(col).alias(f"lo_{col}") for col in nums],
         *[F.max(col).alias(f"hi_{col}") for col in nums],
@@ -171,7 +140,7 @@ def kmeans_lloyd(
             expr = F.when(dists[i] == m, F.lit(i)).otherwise(expr)
         return expr
 
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         rows = (
             clean.groupBy(assign(centers).alias("__c"))
             .agg(
@@ -183,7 +152,7 @@ def kmeans_lloyd(
         by_c = {r["__c"]: r for r in rows}
         centers = [
             [
-                _round_half_up(by_c[i][f"s_{col}"] / by_c[i]["__n"], center_dp)
+                _round_half_up(by_c[i][f"s_{col}"] / by_c[i]["__n"], _KMEANS_CENTER_DP)
                 if i in by_c
                 else centers[i][d]
                 for d, col in enumerate(nums)
@@ -297,7 +266,7 @@ def linear_extrapolation(pipeline, value_col: str, n_pred: int, n_train: int):
     w = Window.orderBy(*pipeline._order_exprs())
     # three consumers (stats agg, fit crossJoin, existing-rows union):
     # without truncation each re-runs the global-order sort — same
-    # multi-consumer rationale as kmeans_lloyd's clean checkpoint (the
+    # multi-consumer rationale as kmeans' clean checkpoint (the
     # series is small post-aggregation data per the reference semantics)
     base = df.withColumn("__i", F.row_number().over(w)).localCheckpoint()
     stats = base.agg(F.max("__i").alias("__total"))

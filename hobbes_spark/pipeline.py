@@ -532,17 +532,21 @@ class Pipeline:
 
         return buckets(self, n, reduction)
 
-    def kmeans(self, k: int, reduction: str, seed: int = 42) -> "Pipeline":
+    def kmeans(self, k: int, reduction: str) -> "Pipeline":
+        """``k-means n -> R`` — one output row per non-empty cluster
+        (``cluster`` in 0..k-1), each numeric column reduced by
+        ``reduction``.
+
+        Deterministic Lloyd's: centres start linearly spaced between each
+        column's min and max, 8 iterations, centres rounded half-up to
+        2 dp after each update, a row goes to its nearest centre with
+        ties to the lowest index. Rows with a NULL or NaN in any numeric
+        column are skipped; non-numeric columns are dropped and the
+        numeric ones are read as double, so every numeric output is
+        double (``count`` and ``distinct`` are bigint)."""
         from hobbes_spark.operators.ml import kmeans
 
-        return kmeans(self, k, reduction, seed=seed)
-
-    def kmeans_lloyd(
-        self, k: int, reduction: str, iters: int = 8, center_dp: int = 2
-    ) -> "Pipeline":
-        from hobbes_spark.operators.ml import kmeans_lloyd
-
-        return kmeans_lloyd(self, k, reduction, iters=iters, center_dp=center_dp)
+        return kmeans(self, k, reduction)
 
     def each(self, reduction: str) -> "Pipeline":
         from hobbes_spark.operators.ml import each

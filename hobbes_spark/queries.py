@@ -855,7 +855,7 @@ def linear_extrapolation_q(spark, sf_dir):
     return p.df
 
 
-def _kmeans_lloyd_sql(
+def _kmeans_sql(
     table: str,
     col: str,
     k: int = 4,
@@ -864,7 +864,7 @@ def _kmeans_lloyd_sql(
     out_dp: int = 2,
 ) -> str:
     """Unrolled deterministic-Lloyd oracle (1-D): one CTE pair per
-    iteration mirroring operators.ml.kmeans_lloyd step for step — linear
+    iteration mirroring operators.ml.kmeans step for step — linear
     init from min/max, squared distance, ties to lowest index, centers
     rounded half-up each round, empty cluster keeps its center."""
     f = 10**center_dp
@@ -906,18 +906,23 @@ def _kmeans_lloyd_sql(
     )
 
 
-@q("kmeans_clusters", _kmeans_lloyd_sql("orders", "o_totalprice"))
+_HB_KMEANS = """\
+slice columns o_totalprice
+k-means 4 -> mean
+"""
+
+
+@q("kmeans_clusters", _kmeans_sql("orders", "o_totalprice"))
 def kmeans_clusters(spark, sf_dir):
-    """``k-means 4 -> mean`` over order totals on the deterministic
-    fixed-iteration Lloyd's path (operators/ml.py kmeans_lloyd) — the
-    unrolled-CTE DuckDB twin replays init/assign/update bit-for-bit, so
-    the clustering is value-hash-checked, not rows-only (reference
-    ships k-means as a first-class statement: snippets:93-99)."""
-    p = (
-        _t(spark, sf_dir, "orders")
-        .slice_columns("o_totalprice")
-        .kmeans_lloyd(4, "mean")
-    )
+    """The ``.hb`` statement ``k-means 4 -> mean`` over order totals,
+    compiled from text, on the deterministic fixed-iteration Lloyd's
+    (operators/ml.py kmeans) — the unrolled-CTE DuckDB twin replays
+    init/assign/update bit-for-bit, so the clustering is
+    value-hash-checked, not rows-only (reference ships k-means as a
+    first-class statement: snippets:93-99)."""
+    from hobbes_spark.hb import run_hb
+
+    p = run_hb(_HB_KMEANS, _t(spark, sf_dir, "orders"))
     return p.create_column(
         "cluster", F.col("cluster").cast("int")
     ).create_column("o_totalprice", _r(F.col("o_totalprice"), 2)).df
@@ -937,7 +942,7 @@ def kmeans_fixture_exact(spark, sf_dir):
     """INDEPENDENT k-means truth pin (round 6): unlike kmeans_clusters,
     whose unrolled-CTE oracle replays the implementation's iterations,
     this oracle contains HAND-COMPUTED literal values on a fixed
-    fixture, so an algorithmic bug in kmeans_lloyd cannot propagate
+    fixture, so an algorithmic bug in operators.ml.kmeans cannot propagate
     into its own oracle.  Fixture: two well-separated 4-point squares
     around (1,1) and (11,11); linear-spacing init puts centers at (3,3)
     and (9,9), the first assignment is already the true partition, and
@@ -950,7 +955,7 @@ def kmeans_fixture_exact(spark, sf_dir):
          (10.0, 10.0), (10.0, 12.0), (12.0, 10.0), (12.0, 12.0)],
         "x double, y double",
     )
-    p = Pipeline(pts).kmeans_lloyd(2, "mean", iters=3)
+    p = Pipeline(pts).kmeans(2, "mean")
     return p.create_column("cluster", F.col("cluster").cast("int")).df
 
 
@@ -6249,7 +6254,7 @@ def group_sample_docs(spark, sf_dir):
 def _pq_core_sql(levels: int = 16, n_queries: int = 3, k: int = 10) -> str:
     """Replay of the PQ quantile-codebook pipeline: per-dim interpolated
     percentiles (rounded half-up to 6 dp, so both engines iterate over
-    IDENTICAL codebooks — the kmeans_lloyd recipe), first-match nearest-
+    IDENTICAL codebooks — operators.ml.kmeans' centre rounding), first-match nearest-
     code assignment, codebook reconstruction, and the in-order squared-
     L2 fold (list_reduce ≡ Spark's F.aggregate: 0.0 + e1 == e1). Ends
     with the ``ranked`` CTE (top-``k`` per query by rounded ADC
@@ -9737,6 +9742,61 @@ def hb_logic_state(spark, sf_dir):
         _r(F.col("c_acctbal"), 4).alias("acctbal"),
         F.col("Customer Number").cast("int").alias("customer_number"),
         F.col("Segment").alias("segment"),
+    )
+
+
+_HB_BURN_UP = """
+only (o_orderstatus = 'F')
+create column Day (format date "o_orderdate" date)
+slice columns Day o_totalprice
+create column tick 1
+group by Day -> sum
+sort by column Day
+create column Position ordinals
+create column "Burn up" (expanding sum [tick])
+create column "Peak day" (expanding max [o_totalprice])
+create column "Daily rate" ("Burn up" / (Position + 1))
+slice columns Day Position "Burn up" "Peak day" "Daily rate"
+"""
+
+
+@q(
+    "hb_burn_up_ordinals",
+    f"""
+    WITH days AS (
+      SELECT CAST(o_orderdate AS DATE) AS d, SUM(o_totalprice) AS price,
+             COUNT(*) AS tick
+      FROM orders WHERE o_orderstatus = 'F' GROUP BY 1
+    ),
+    w AS (
+      SELECT d, ROW_NUMBER() OVER (ORDER BY d) - 1 AS pos,
+             SUM(tick) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
+                                                 AND CURRENT ROW) AS burn,
+             MAX(price) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
+                                                  AND CURRENT ROW) AS peak
+      FROM days
+    )
+    SELECT CAST(d AS VARCHAR) AS day, CAST(pos AS INTEGER) AS position,
+           CAST(burn AS BIGINT) AS burn_up, {_rsql('peak', 4)} AS peak_day,
+           {_rsql('CAST(burn AS DOUBLE) / (pos + 1)', 6)} AS daily_rate
+    FROM w
+    """,
+)
+def hb_burn_up_ordinals(spark, sf_dir):
+    """A burn-up chart (workbench Metrics.fs:59) from .hb text: per-day
+    completed-order totals, then the two order-dependent forms no other
+    ``_HB_*`` program uses — ``ordinals`` (0-based position under
+    ``sort by``) and ``expanding`` (running sum and running max) — and
+    an expression that reads both."""
+    from hobbes_spark.hb import run_hb
+
+    out = run_hb(_HB_BURN_UP, _t(spark, sf_dir, "orders"))
+    return out.df.select(
+        F.col("Day").cast("string").alias("day"),
+        F.col("Position").cast("int").alias("position"),
+        F.col("Burn up").cast("bigint").alias("burn_up"),
+        _r(F.col("Peak day"), 4).alias("peak_day"),
+        _r(F.col("Daily rate"), 6).alias("daily_rate"),
     )
 
 

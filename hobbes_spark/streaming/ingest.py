@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hobbes_spark.pipeline import read_parquet_any_ts
 from hobbes_spark.streaming.sinks import _path_exists, store_writer
 
 __all__ = [
@@ -71,11 +72,12 @@ def read_signature_store(
     read failure (transient FS error, corrupt footer, permissions)
     raises: treating it as an empty corpus would silently drop every
     new-vs-base pair for this batch, and the checkpoint would commit the
-    loss permanently."""
+    loss permanently. Re-opening an unchanged store reuses its schema
+    (``read_parquet_any_ts``) and launches no Spark job."""
     path = f"{store_dir}/signatures"
     if not _path_exists(spark, path):
         return None
-    df = spark.read.parquet(path)
+    df = read_parquet_any_ts(spark, path)
     if before_batch is not None:
         df = df.filter(F.col("_batch_id") < before_batch)
     return df.select("id", "sig")
@@ -209,9 +211,11 @@ def cms_ingest_writer(
 
 def cms_store_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged (d, pos, cnt) sketch over every ingested batch —
-    feed it to functions.sketches.cms_estimate / downstream rollups."""
+    feed it to functions.sketches.cms_estimate / downstream rollups.
+    Like :func:`read_signature_store`, re-opening an unchanged store
+    launches no Spark job."""
     return (
-        spark.read.parquet(f"{store_dir}/cells")
+        read_parquet_any_ts(spark, f"{store_dir}/cells")
         .groupBy("d", "pos")
         .agg(F.sum("cnt").alias("cnt"))
     )

@@ -12,6 +12,7 @@ import pytest
 
 from hobbes_spark.streaming.ingest import (
     cms_ingest_writer,
+    cms_store_sketch,
     hll_ingest_writer,
     minhash_ingest_writer,
     read_signature_store,
@@ -181,3 +182,21 @@ def test_corrupt_signature_store_raises(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet"):
         minhash_ingest_writer(store, hash_fn="md5")(_docs(spark, 1), 1)
     assert not os.path.exists(tmp_path / "store" / "pairs")
+
+
+def test_store_reopen_launches_no_job(spark, tmp_path, spark_jobs):
+    """Re-opening an unchanged signature or count-min store reuses the
+    schema of the first read: no Spark job, the same schema and rows."""
+    sigs, cells = str(tmp_path / "sigs"), str(tmp_path / "cells")
+    minhash_ingest_writer(sigs)(_docs(spark, 0), 0)
+    cms_ingest_writer(cells, "t")(_terms(spark, 0), 0)
+
+    def reopen():
+        return read_signature_store(spark, sigs), cms_store_sketch(spark, cells)
+
+    opened = reopen()
+    reopened, jobs, _ = spark_jobs(reopen)
+    assert jobs == 0
+    for first, again in zip(opened, reopened):
+        assert again.schema == first.schema
+        assert sorted(again.collect()) == sorted(first.collect())

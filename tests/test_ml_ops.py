@@ -83,7 +83,7 @@ def test_linear_extrapolation_zero_and_negative_pred(series):
 def test_kmeans_two_blobs(spark):
     pts = [(float(i % 7) / 100 + (0.0 if i < 30 else 100.0),) for i in range(60)]
     df = spark.createDataFrame(pts, "x double")
-    out = Pipeline(df).kmeans(2, "mean", seed=7)
+    out = Pipeline(df).kmeans(2, "mean")
     rows = out.df.orderBy("cluster").collect()
     assert len(rows) == 2
     assert rows[0]["x"] == pytest.approx(0.03, abs=0.01)
@@ -95,8 +95,8 @@ class TestKmeansLloyd:
         from hobbes_spark.pipeline import Pipeline
 
         p = Pipeline.table(spark, sf_dir, "orders").slice_columns("o_totalprice")
-        a = p.kmeans_lloyd(4, "mean").df.collect()
-        b = p.kmeans_lloyd(4, "mean").df.collect()
+        a = p.kmeans(4, "mean").df.collect()
+        b = p.kmeans(4, "mean").df.collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
         assert len(a) >= 2  # non-degenerate clustering
 
@@ -107,25 +107,9 @@ class TestKmeansLloyd:
         from hobbes_spark.pipeline import Pipeline
 
         p = Pipeline.table(spark, sf_dir, "orders").slice_columns("o_totalprice")
-        rows = p.kmeans_lloyd(4, "mean").df.collect()
+        rows = p.kmeans(4, "mean").df.collect()
         means = [r["o_totalprice"] for r in rows]
         assert means == sorted(means)
-
-    def test_mean_reduction_close_to_mllib(self, spark, sf_dir):
-        """Lloyd's and MLlib optimize the same objective on 1-D data; the
-        per-cluster means (sorted) should land in the same ballpark."""
-        from hobbes_spark.pipeline import Pipeline
-
-        p = Pipeline.table(spark, sf_dir, "orders").slice_columns("o_totalprice")
-        lloyd = sorted(
-            r["o_totalprice"] for r in p.kmeans_lloyd(4, "mean").df.collect()
-        )
-        ml = sorted(
-            r["o_totalprice"] for r in p.kmeans(4, "mean", seed=42).df.collect()
-        )
-        spread = max(ml) - min(ml)
-        for a, b in zip(lloyd, ml):
-            assert abs(a - b) < 0.35 * spread
 
     def test_nulls_skipped_and_multidim(self, spark):
         from hobbes_spark.pipeline import Pipeline
@@ -134,8 +118,26 @@ class TestKmeansLloyd:
             [(0.0, 0.0), (0.1, 0.2), (10.0, 9.9), (10.2, 10.0), (None, 5.0)],
             "x double, y double",
         )
-        out = Pipeline(df).kmeans_lloyd(2, "count").df.collect()
+        out = Pipeline(df).kmeans(2, "count").df.collect()
         assert sum(r["x"] for r in out) == 4  # NULL row dropped, 2+2 split
+
+    def test_hb_statement_same_rows_in_any_layout(self, spark):
+        """``k-means 3 -> mean`` from .hb text gives the same rows over
+        the same data in two layouts (reversed over 4 partitions vs one
+        partition), and the same rows as ``Pipeline.kmeans``. Integer
+        values keep every sum exact, so equality is exact."""
+        from hobbes_spark.hb import run_hb
+
+        rows = [(f"r{i}", float(i * 37 % 1000), float(i * 11 % 97)) for i in range(600)]
+        schema = "id string, x double, y double"
+        spread = spark.createDataFrame(rows[::-1], schema).repartition(4)
+        single = spark.createDataFrame(rows, schema).repartition(1)
+        prog = "k-means 3 -> mean\n"
+        a = run_hb(prog, Pipeline(spread)).df.collect()
+        b = run_hb(prog, Pipeline(single)).df.collect()
+        direct = Pipeline(single).kmeans(3, "mean").df.collect()
+        assert len(a) == 3
+        assert a == b == direct
 
 
 def test_each_count_zero_on_all_null_row(spark):
@@ -150,16 +152,16 @@ def test_each_count_zero_on_all_null_row(spark):
 
 
 def test_kmeans_lloyd_empty_and_nan_guards(spark):
-    from hobbes_spark.operators.ml import kmeans_lloyd
+    from hobbes_spark.operators.ml import kmeans
     from hobbes_spark.pipeline import Pipeline
 
     empty = Pipeline(
         spark.createDataFrame([(None,)], "x double")
     )
     with pytest.raises(ValueError, match="no complete rows"):
-        kmeans_lloyd(empty, 2, "mean")
+        kmeans(empty, 2, "mean")
     nan = Pipeline(
         spark.createDataFrame([(float("nan"),), (1.0,), (2.0,)], "x double")
     )
-    out = kmeans_lloyd(nan, 2, "mean").df.collect()  # NaN row filtered, no crash
+    out = kmeans(nan, 2, "mean").df.collect()  # NaN row filtered, no crash
     assert len(out) <= 2

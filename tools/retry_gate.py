@@ -37,6 +37,11 @@ speculation checker clones) and yields rows REVERSED on any attempt
 differs — the same sharp edge as retry mode, now arriving through the
 speculation scheduler path.
 
+The k-means target, ``kmeans_clusters``, compiles the ``.hb`` statement
+``k-means 4 -> mean`` from text, so both modes check the one k-means
+path (``Pipeline.kmeans``, a deterministic Lloyd's) that ``.hb``
+programs and the Pipeline API run.
+
 Both modes assert the perturbed snapshot (the strict ``_snapshot`` of
 tools/gate_check.py) is byte-identical to CLEAN, and both carry a
 NEGATIVE CONTROL (an order-sensitive ``first()`` probe) that must
@@ -62,7 +67,7 @@ from tools.gate_check import _snapshot  # noqa: E402
 DEFAULT_TARGETS = [
     "group_maxby",          # whole-row maxby: the §2.4 "arbitrary row" fold
     "flowerpot",            # maxby + regex/int derive golden pipeline
-    "kmeans_clusters",      # iterative init + assignment ties
+    "kmeans_clusters",      # .hb k-means: iterative init + assignment ties
     "weighted_sample_docs", # systematic sampler over hash order
     "dedup_keep_best",      # canonical keep-best pick within dup clusters
 ]
